@@ -1,0 +1,5 @@
+"""Benchmark for the XML→star ETL pipeline and the read-side catalog.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``run.py``.
+"""
