@@ -297,9 +297,10 @@ def test_pipeline_atomic_mode_end_to_end(spark, tmp_path, commit_backend):
     assert current_manifest(res2.paths["fact_main"])["version"] == 2
     assert read_published(spark, fact_root).count() == 6
     # metadata counts the committed version only (not both versions)
+    report = parquet_metadata(res2.paths)
     meta = {
-        r.table_name: r.n_rows
-        for r in parquet_metadata(spark, res2.paths).collect()
+        r["table_name"]: r["n_rows"]
+        for r in (dict(zip(report.columns, row)) for row in report.rows)
     }
     assert meta["fact_main"] == 6
 

@@ -185,12 +185,14 @@ def test_pbshim_shipping_preserves_package_imports():
     driver session (no get_spark defaults), running the TWS path and
     THEN a mapInPandas operator that unpickles a by-reference module
     function used to die with ModuleNotFoundError in the worker."""
+    import os
     import subprocess
     import sys
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[2]")
          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -210,11 +212,15 @@ out = fix_mojibake_deep(df).collect()
 assert out[0].fixed == "café", out
 print("SHIP_OK")
 """
+    # an inherited PYTHONPATH naming the repo (get_spark exports one)
+    # would keep the package importable on workers by itself
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     r = subprocess.run(
-        [sys.executable, "-c", script],
+        [sys.executable, "-c", script, repo],
         capture_output=True,
         text=True,
         timeout=300,
         cwd="/",
+        env=env,
     )
     assert "SHIP_OK" in r.stdout, r.stderr[-2000:]

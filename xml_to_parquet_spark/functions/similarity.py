@@ -1777,7 +1777,11 @@ def mmr_select_sql(
     """Unrolled-round DuckDB replay of :func:`mmr_select`: one CTE
     chain per greedy round (pick → accumulate maxdot → exclude), all
     arithmetic on the same exact integers (dots ≤ 2^53 are exact in
-    DuckDB's double list_dot_product)."""
+    DuckDB's double list_dot_product).
+
+    The round CTEs are ``MATERIALIZED``: ``w{r}`` reads ``w{r-1}`` both
+    directly and through ``s{r}``, so an inlined chain doubles its work
+    every round (2^k)."""
     qexpr = (
         f"list_transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE) * "
         f"{float(quant)!r} + 0.5) AS BIGINT))"
@@ -1785,26 +1789,28 @@ def mmr_select_sql(
     parts = [
         f"base AS (SELECT {id_col} AS vec_id, {qexpr} AS vq FROM {table})",
         f"qv AS (SELECT vq AS qq FROM base WHERE vec_id = {query_id})",
-        "w0 AS (SELECT b.vec_id, b.vq, CAST(list_dot_product(b.vq, q.qq)"
-        " AS BIGINT) AS rel, CAST(0 AS BIGINT) AS maxdot FROM base b, qv q"
+        "w0 AS MATERIALIZED (SELECT b.vec_id, b.vq, "
+        "CAST(list_dot_product(b.vq, q.qq) AS BIGINT) AS rel, "
+        "CAST(0 AS BIGINT) AS maxdot FROM base b, qv q"
         f" WHERE b.vec_id <> {query_id})",
-        "p0 AS (SELECT CAST(NULL AS BIGINT) AS vec_id WHERE 1 = 0)",
+        "p0 AS MATERIALIZED "
+        "(SELECT CAST(NULL AS BIGINT) AS vec_id WHERE 1 = 0)",
     ]
     for r in range(1, k + 1):
         parts.append(
-            f"s{r} AS (SELECT vec_id, vq, rel, maxdot, "
+            f"s{r} AS MATERIALIZED (SELECT vec_id, vq, rel, maxdot, "
             f"{lam_den} * rel - {lam_num} * maxdot AS score "
             f"FROM w{r - 1} WHERE vec_id NOT IN "
             f"(SELECT vec_id FROM p{r - 1}) "
             f"ORDER BY score DESC, vec_id LIMIT 1)"
         )
         parts.append(
-            f"p{r} AS (SELECT vec_id FROM p{r - 1} "
+            f"p{r} AS MATERIALIZED (SELECT vec_id FROM p{r - 1} "
             f"UNION ALL SELECT vec_id FROM s{r})"
         )
         if r < k:
             parts.append(
-                f"w{r} AS (SELECT w.vec_id, w.vq, w.rel, "
+                f"w{r} AS MATERIALIZED (SELECT w.vec_id, w.vq, w.rel, "
                 f"greatest(w.maxdot, CAST(list_dot_product(w.vq, s.vq) "
                 f"AS BIGINT)) AS maxdot FROM w{r - 1} w, s{r} s)"
             )

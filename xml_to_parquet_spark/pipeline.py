@@ -27,6 +27,7 @@ from xml_to_parquet_spark.plans.star_transformer import (
     validate_star_schema,
 )
 from xml_to_parquet_spark.sinks.writers import (
+    Report,
     parquet_metadata,
     processing_manifest,
     schema_documentation,
@@ -196,36 +197,30 @@ def process_xml_to_parquet(
                 result.paths = write_star_schema(star, output_dir)
             if write_reports:
                 manifest_rows, manifest_schema = manifest_future.result()
-                # bounded-row reports (1 / #tables / #columns rows) take
-                # the driver-side CSV path — a Spark job per tiny CSV is
-                # pure scheduler overhead (see write_csv_report). The
-                # manifest was also materialized UP THERE, while records
+                # the manifest was materialized UP THERE, while records
                 # are persisted: callers (CLI summary, tests) collect it
-                # after the unpersist below, and a lazy manifest would
-                # re-run the whole XML parse just to count rows.
-                manifest = spark.createDataFrame(
+                # after the unpersist below, and a frame over the records
+                # would re-run the whole XML parse just to count rows.
+                # Bounded reports are written from the driver's rows
+                # (see write_csv_report).
+                result.manifest = spark.createDataFrame(
                     manifest_rows, manifest_schema
                 )
-                result.manifest = manifest
                 write_csv_report(
-                    manifest,
+                    Report(tuple(manifest_schema.fieldNames()), manifest_rows),
                     os.path.join(output_dir, "processing_manifest.csv"),
-                    local=True,
                 )
-                meta = parquet_metadata(spark, result.paths)
                 write_csv_report(
-                    meta,
+                    parquet_metadata(result.paths),
                     os.path.join(output_dir, "parquet_metadata.csv"),
                     mode="overwrite",
-                    local=True,
                 )
                 # reference document_schema intent (parquet_writer.R:24-26):
                 # per-column classification doc alongside the star outputs
                 write_csv_report(
-                    schema_documentation(spark, catalog),
+                    schema_documentation(catalog),
                     os.path.join(output_dir, "schema_documentation.csv"),
                     mode="overwrite",
-                    local=True,
                 )
                 if validation is not None:
                     # error channel (reference error_summary.csv,

@@ -9,6 +9,9 @@ session settings transfer to a multi-executor cluster:
 - Arrow execution for the few pandas-UDF paths (vectorized Python transfer)
 - shuffle partitions sized by env for local runs; on a real cluster AQE
   coalescing makes the initial number less critical
+- for ``local[...]`` masters, Python workers start from
+  :mod:`xml_to_parquet_spark.worker_daemon`, which stops every task from
+  re-reading ``pyspark.zip``'s central directory
 """
 
 from __future__ import annotations
@@ -41,8 +44,8 @@ def get_spark(
     # a real installation is handled by the shim itself (_pbshim/google/
     # __init__.py merges sys.path google/ dirs and sorts itself last), so
     # exporting the shim path is safe even if workers have real protobuf.
-    shim = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "_pbshim")
+    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shim = os.path.join(pkg_root, "xml_to_parquet_spark", "_pbshim")
     try:  # pragma: no cover - environment probe
         import google.protobuf
 
@@ -54,12 +57,18 @@ def get_spark(
         ).startswith(shim)
     except ImportError:
         real = False
+    # local workers start from this package's worker daemon, so the
+    # package root goes on the same exported path
+    local = master == "local" or master.startswith("local[")
+    exports = [pkg_root] if local else []
     if not real:
-        parts = os.environ.get("PYTHONPATH", "").split(os.pathsep)
-        if shim not in parts:
-            os.environ["PYTHONPATH"] = os.pathsep.join(
-                [p for p in [os.environ.get("PYTHONPATH")] if p] + [shim]
-            )
+        exports.append(shim)
+    pythonpath = os.environ.get("PYTHONPATH", "")
+    missing = [p for p in exports if p not in pythonpath.split(os.pathsep)]
+    if missing:
+        os.environ["PYTHONPATH"] = os.pathsep.join(
+            [p for p in [pythonpath] if p] + missing
+        )
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
 
@@ -84,11 +93,36 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
     )
+    daemon = local and _jvm_exports(pkg_root)
+    if daemon:
+        builder = builder.config(
+            "spark.python.daemon.module", "xml_to_parquet_spark.worker_daemon"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    _ship_package(spark)
+    if daemon:
+        # workers import the package from pkg_root on their PYTHONPATH, so
+        # a shipped zip would never be consulted
+        spark._xml_to_parquet_spark_shipped = True
+    else:
+        _ship_package(spark)
     return spark
+
+
+def _jvm_exports(path: str) -> bool:
+    """Whether Python workers will see ``path`` on their PYTHONPATH: the
+    JVM passes on the PYTHONPATH it was launched with, so a gateway
+    already running from before the export above does not. Neither does
+    the JVM of ``spark-submit``, which PySpark attaches to through
+    ``PYSPARK_GATEWAY_PORT`` before any session exists."""
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    if jvm is None:  # launched by getOrCreate below, after the export
+        return "PYSPARK_GATEWAY_PORT" not in os.environ
+    launched = jvm.java.lang.System.getenv("PYTHONPATH") or ""
+    return path in launched.split(os.pathsep)
 
 
 from contextlib import contextmanager

@@ -4,6 +4,7 @@ from xml_to_parquet_spark.sinks.writers import (
     write_csv_report,
     parquet_metadata,
     processing_manifest,
+    Report,
 )
 
 __all__ = [
@@ -12,4 +13,5 @@ __all__ = [
     "write_csv_report",
     "parquet_metadata",
     "processing_manifest",
+    "Report",
 ]

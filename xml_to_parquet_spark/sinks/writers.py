@@ -10,15 +10,17 @@ Reference parity (/root/reference/R/parquet_writer.R):
 
 Scale notes: fact writes stay fully parallel (one file per partition);
 ``single_file=True`` coalesces to 1 only for byte-parity with the
-reference's one-file outputs — never do that at 100 TB. Manifest/metadata
-are one-row-per-table DataFrames computed Spark-side (fixes reference quirk
-2: driver-side counters that under-count under parallelism).
+reference's one-file outputs — never do that at 100 TB. The manifest's
+counts are aggregated Spark-side (fixes reference quirk 2: driver-side
+counters that under-count under parallelism); metadata comes from the
+parquet footers.
 """
 
 from __future__ import annotations
 
 import os
 from datetime import datetime, timezone
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,38 +88,44 @@ def write_star_schema(
     return paths
 
 
-def write_csv_report(
-    df: DataFrame, path: str, mode: str = "append", local: bool = False
-) -> None:
-    """Tiny-report CSV sink (reference K3): single file, header, append.
+class Report(NamedTuple):
+    """A report whose rows the driver already holds, bounded by
+    construction: the run manifest (1 row), parquet metadata (#tables
+    rows), schema documentation (#columns rows)."""
 
-    ``local=True`` collects the frame and writes one CSV file driver-side
-    (stdlib csv). Use it ONLY for reports whose row count is bounded by
-    construction — the run manifest (1 row), parquet metadata (#tables
-    rows), schema documentation (#columns rows): a Spark job per 1-row
-    CSV is pure scheduler overhead at every scale (measured ~2.4 s of the
-    100-file ETL benchmark's 7 s). Unbounded reports (error_summary =
-    one row per failed file) keep the distributed write path.
+    columns: tuple[str, ...]
+    rows: list[tuple]
+
+
+def write_csv_report(
+    report: DataFrame | Report, path: str, mode: str = "append"
+) -> None:
+    """CSV report sink (reference K3): single file, header, append.
+
+    A :class:`Report` is written driver-side with stdlib csv, without a
+    Spark job: handing its rows to ``createDataFrame`` and collecting
+    them back ran a Python-worker job per report for rows the driver
+    already had.  A DataFrame (error_summary = one row per failed file,
+    unbounded) keeps the distributed single-file write.
     ``spark.read.csv`` reads both layouts identically.
     """
-    if local:
+    if isinstance(report, Report):
         import csv
 
-        rows = df.collect()
         write_header = mode == "overwrite" or not os.path.exists(path)
         with open(path, "w" if mode == "overwrite" else "a", newline="") as fh:
             w = csv.writer(fh)
             if write_header:
-                w.writerow(df.columns)
+                w.writerow(report.columns)
             w.writerows(
-                ["" if v is None else v for v in r] for r in rows
+                ["" if v is None else v for v in r] for r in report.rows
             )
         return
-    df.coalesce(1).write.mode(mode).option("header", "true").csv(path)
+    report.coalesce(1).write.mode(mode).option("header", "true").csv(path)
 
 
-def parquet_metadata(spark: SparkSession, paths: dict[str, str]) -> DataFrame:
-    """Per-table metadata DF (reference parquet_writer.R:163-189):
+def parquet_metadata(paths: dict[str, str]) -> Report:
+    """Per-table metadata report (reference parquet_writer.R:163-189):
     table, path, n_rows, n_columns, size_bytes.
 
     Row counts and column counts come from the parquet FOOTERS (pyarrow,
@@ -167,36 +175,25 @@ def parquet_metadata(spark: SparkSession, paths: dict[str, str]) -> DataFrame:
         )
         size = sum(os.path.getsize(f) for f in parts)
         rows.append((table, p, n, n_cols, size))
-    return spark.createDataFrame(
-        rows,
-        "table_name string, path string, n_rows long, n_columns int, "
-        "size_bytes long",
+    return Report(
+        ("table_name", "path", "n_rows", "n_columns", "size_bytes"), rows
     )
 
 
-def schema_documentation(spark: SparkSession, catalog: dict[str, dict]) -> DataFrame:
-    """Per-column schema documentation table (reference ``document_schema``,
+def schema_documentation(catalog: dict[str, dict]) -> Report:
+    """Per-column schema documentation (reference ``document_schema``,
     parquet_writer.R:24-26 + schema_analyzer.R:113-121): the classification
-    catalog rendered as a writable one-row-per-column DataFrame."""
-    rows = [
-        (
-            col,
-            info.get("classification"),
-            info.get("data_type"),
-            info.get("n_rows"),
-            info.get("unique_count"),
-            info.get("numeric_ratio"),
-            info.get("null_ratio"),
-            info.get("mean_length"),
-            info.get("sample_values"),
-        )
-        for col, info in sorted(catalog.items())
-    ]
-    return spark.createDataFrame(
-        rows,
-        "column_name string, classification string, data_type string, "
-        "n_rows long, unique_count long, numeric_ratio double, "
-        "null_ratio double, mean_length double, sample_values string",
+    catalog rendered as a one-row-per-column report."""
+    fields = (
+        "classification", "data_type", "n_rows", "unique_count",
+        "numeric_ratio", "null_ratio", "mean_length", "sample_values",
+    )
+    return Report(
+        ("column_name", *fields),
+        [
+            (col, *(info.get(f) for f in fields))
+            for col, info in sorted(catalog.items())
+        ],
     )
 
 

@@ -249,9 +249,13 @@ def validate_files(
     pdf_schema = "source_file_path string, schema_file string"
     # partition count: enough slices to use every core with headroom for
     # size skew, but not one near-empty task per file — each mapInPandas
-    # task pays a Python-worker/Arrow round trip (~15 ms), so 64 tasks
-    # for 100 small files spent more on task overhead than on parsing
-    # (measured 1.9 s → 0.85 s at 100 files / 8 cores with 2×cores tasks)
+    # task pays a Python-worker/Arrow round trip, and under the stock
+    # pyspark daemon also a re-read of pyspark.zip's central directory by
+    # every zip importer (the task set-up calls importlib.invalidate_caches;
+    # about 0.12 s CPU per task on CPython 3.11 and a 4-core x86-64 VM,
+    # which get_spark's worker_daemon removes), so 64 tasks for 100 small
+    # files spent more on task overhead than on parsing (measured 1.9 s
+    # → 0.85 s at 100 files / 8 cores with 2×cores tasks)
     n_parts = max(1, min(len(plan), 2 * spark.sparkContext.defaultParallelism))
     src = spark.createDataFrame(
         [(f, s or "") for f, s in plan], pdf_schema
