@@ -23,11 +23,11 @@ def test_window_matches_stalest_first_policy():
 
 
 def test_rotate_window_idempotent_when_policy_holds():
-    # immediately after a rotation the plan must be empty — renames
-    # happen once per round, not on every invocation. When a new
+    # while the window holds the policy the plan is empty — renames
+    # happen once per round, not on every invocation. When one new
     # CORRECTNESS file has landed since the last rotation (one-round
     # lag), a non-empty plan is the expected prompt to rotate; in that
-    # state applying the plan twice must still be a fixed point.
+    # state the alarm must report no failures and a "lags" warning.
     plan = rw.plan_renames()
     if plan:
         failures, warnings = rr.staleness_alarm(rr.build_rows())

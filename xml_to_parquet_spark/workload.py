@@ -7507,13 +7507,13 @@ QUERIES: dict[str, QuerySpec] = {
     "q192_grouped_multi_agg": QuerySpec(
         q_grouped_multi_agg, _Q_GROUPED_MULTI_AGG_SQL, "A2 {col}_{fn} agg"
     ),
-    "q193_count_by_group": QuerySpec(
+    "a238_count_by_group": QuerySpec(
         q_count_by_group, _Q_COUNT_BY_GROUP_SQL, "A3 count-by-group"
     ),
     "q194_project_filter": QuerySpec(
         q_project_filter, _Q_PROJECT_FILTER_SQL, "P1/P3 projection+filter"
     ),
-    "q195_distinct": QuerySpec(q_distinct, _Q_DISTINCT_SQL, "U2 distinct"),
+    "a239_distinct": QuerySpec(q_distinct, _Q_DISTINCT_SQL, "U2 distinct"),
     "q196_sort_limit": QuerySpec(
         q_sort_limit, _Q_SORT_LIMIT_SQL, "O1/O2 sort+limit"
     ),
@@ -7526,13 +7526,13 @@ QUERIES: dict[str, QuerySpec] = {
     "q199_star_dim_keys": QuerySpec(
         q_star_dim_keys, _Q_STAR_DIM_KEYS_SQL, "J1/J3/W1 star build"
     ),
-    "q200_cast_null_on_fail": QuerySpec(
+    "a240_cast_null_on_fail": QuerySpec(
         q_cast_null_on_fail, _Q_CAST_NULL_SQL, "F1 null-on-fail cast"
     ),
     "q201_regex_extract": QuerySpec(
         q_regex_extract, _Q_REGEX_EXTRACT_SQL, "F4/F5 regex"
     ),
-    "q202_conditional_classify": QuerySpec(
+    "a241_conditional_classify": QuerySpec(
         q_conditional_classify, _Q_CONDITIONAL_SQL, "P7 case ladder"
     ),
     "q203_json_extract": QuerySpec(
@@ -7556,24 +7556,24 @@ QUERIES: dict[str, QuerySpec] = {
     "q207_fingerprint": QuerySpec(
         q_fingerprint, _Q_FINGERPRINT_SQL, "normalized-text fingerprints"
     ),
-    "q208_dedup_exact": QuerySpec(
+    "a242_dedup_exact": QuerySpec(
         q_dedup_exact, _Q_DEDUP_EXACT_SQL, "exact dedup (hash groupBy)"
     ),
-    "a197_dedup_ngram_jaccard": QuerySpec(
+    "q344_dedup_ngram_jaccard": QuerySpec(
         q_dedup_ngram_jaccard,
         _ngram_jaccard_sql(),
         "LSH candidates + exact 3-gram Jaccard verify",
     ),
-    "q209_dedup_minhash_sig": QuerySpec(
+    "a243_dedup_minhash_sig": QuerySpec(
         q_dedup_minhash_sig, _minhash_sig_sql(), "MinHash signatures"
     ),
-    "q210_dedup_minhash_lsh": QuerySpec(
+    "a244_dedup_minhash_lsh": QuerySpec(
         q_dedup_minhash_lsh, _minhash_lsh_sql(), "MinHash LSH candidates"
     ),
-    "q211_dedup_simhash": QuerySpec(
+    "a245_dedup_simhash": QuerySpec(
         q_dedup_simhash, _simhash_sql(), "SimHash signatures"
     ),
-    "q212_dedup_embedding": QuerySpec(
+    "a246_dedup_embedding": QuerySpec(
         q_dedup_embedding, _Q_DEDUP_EMBEDDING_SQL, "embedding-cosine near-dups"
     ),
     "q213_knn_brute": QuerySpec(
@@ -7602,7 +7602,7 @@ QUERIES: dict[str, QuerySpec] = {
         q_time_bucket, _Q_TIME_BUCKET_SQL, "tumbling event-time window"
     ),
     "q219_semi_join": QuerySpec(q_semi_join, _Q_SEMI_JOIN_SQL, "left semi join"),
-    "q220_anti_join": QuerySpec(q_anti_join, _Q_ANTI_JOIN_SQL, "left anti join"),
+    "a247_anti_join": QuerySpec(q_anti_join, _Q_ANTI_JOIN_SQL, "left anti join"),
     "q221_rollup": QuerySpec(q_rollup, _Q_ROLLUP_SQL, "rollup grouping sets"),
     "q222_sql_frontend": QuerySpec(
         q_sql_frontend, _Q_SQL_FRONTEND_SQL, "spark.sql frontend (TPC-H q6)"
@@ -7632,7 +7632,7 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_XML_STAR_GOLDEN_SQL,
         "XML ingest -> star transform vs fully-determined golden values",
     ),
-    "q223_date_arith": QuerySpec(
+    "a248_date_arith": QuerySpec(
         q_date_arith, _Q_DATE_ARITH_SQL, "date extraction/arithmetic/diffs"
     ),
     "q224_set_ops": QuerySpec(
@@ -7645,8 +7645,8 @@ QUERIES: dict[str, QuerySpec] = {
     "q227_percentile": QuerySpec(
         q_percentile, _Q_PERCENTILE_SQL, "exact interpolated percentiles"
     ),
-    "q228_cube": QuerySpec(q_cube, _Q_CUBE_SQL, "cube grouping sets"),
-    "q229_asof_join": QuerySpec(
+    "a249_cube": QuerySpec(q_cube, _Q_CUBE_SQL, "cube grouping sets"),
+    "a250_asof_join": QuerySpec(
         q_asof_join, _Q_ASOF_JOIN_SQL, "as-of join composed from window"
     ),
     "q230_sessionize": QuerySpec(
@@ -7677,7 +7677,7 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     # r6 additions (a42-a45 sort into the driver window; q02-q05 rotate
     # out — driver-green since r1, still in pytest + full verify sweeps)
-    "a156_substring_dedup": QuerySpec(
+    "q324_substring_dedup": QuerySpec(
         q_substring_dedup,
         _Q_SUBSTRING_DEDUP_SQL,
         "repeated-k-gram span detection (substring-level dedup)",
@@ -7687,22 +7687,22 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_BPE_TOKENS_SQL,
         "real BPE merge-loop token counts (broadcast merges table)",
     ),
-    "a192_bpe_learn": QuerySpec(
+    "q341_bpe_learn": QuerySpec(
         q_bpe_learn,
         _BPE_LEARN_SQL,
         "distributed BPE merge training (greedy pair-count rounds)",
     ),
-    "a200_ivf_pq_adc": QuerySpec(
+    "q347_ivf_pq_adc": QuerySpec(
         q_ivf_pq_adc,
         _Q_IVF_PQ_ADC_SQL,
         "IVF-PQ asymmetric-distance ANN with exact integer re-rank",
     ),
-    "a184_audio_fp_dedup": QuerySpec(
+    "q337_audio_fp_dedup": QuerySpec(
         q_audio_fp_dedup,
         _Q_AUDIO_FP_SQL,
         "audio near-dup dedup: WAV decode → energy-delta fp → Hamming",
     ),
-    "q318_image_phash_dedup": QuerySpec(
+    "a269_image_phash_dedup": QuerySpec(
         q_image_phash_dedup,
         _Q_IMAGE_PHASH_SQL,
         "image near-dup dedup: netpbm decode → dHash → Hamming blocking",
@@ -7712,7 +7712,7 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_NETPBM_REAL_SQL,
         "REAL netpbm decode + raster resample (md5-matched output bytes)",
     ),
-    "a201_sessionize_tws": QuerySpec(
+    "q348_sessionize_tws": QuerySpec(
         q_sessionize_tws,
         _Q_SESSIONIZE_TWS_SQL,
         "transformWithStateInPandas sessions (real state protocol)",
@@ -7769,12 +7769,12 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     # r7 addition: char-n-gram LM quality gate (the CCNet/KenLM
     # perplexity-filter shape, integer-exact). Takes a59's window slot.
-    "a159_rare_gram_lm": QuerySpec(
+    "q327_rare_gram_lm": QuerySpec(
         q_rare_gram_lm,
         _q_rare_gram_sql(),
         "char-trigram rare-fraction LM gate (relative-frequency rarity)",
     ),
-    "a199_simhash_blocked": QuerySpec(
+    "q346_simhash_blocked": QuerySpec(
         q_simhash_blocked,
         _simhash_blocked_sql(),
         "SimHash Hamming pairs via pigeonhole chunk blocking",
@@ -7789,7 +7789,7 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_VALIDATION_GATE_SQL,
         "P4 validation gate excludes malformed files (golden fixture)",
     ),
-    "q236_default_count_measure": QuerySpec(
+    "a251_default_count_measure": QuerySpec(
         q_default_count_measure,
         _Q_DEFAULT_COUNT_MEASURE_SQL,
         "A6 default record_count measure (golden fixture)",
@@ -7814,12 +7814,12 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_REPETITION_INT_SQL,
         "Gopher-style within-doc repetition signals",
     ),
-    "a160_quality_gate": QuerySpec(
+    "q328_quality_gate": QuerySpec(
         q_quality_gate,
         _q_quality_gate_sql(),
         "composite quality gate with named drop reasons",
     ),
-    "a196_corpus_line_dedup": QuerySpec(
+    "q343_corpus_line_dedup": QuerySpec(
         q_corpus_line_dedup,
         _Q_CORPUS_LINE_DEDUP_SQL,
         "corpus-level repeated-line removal (C4 boilerplate rule)",
@@ -7832,12 +7832,12 @@ QUERIES: dict[str, QuerySpec] = {
         _q_hamming_ann_sql(),
         "binary sign-signature ANN: Hamming-ball candidates + exact re-rank",
     ),
-    "q319_hybrid_rrf": QuerySpec(
+    "a270_hybrid_rrf": QuerySpec(
         q_hybrid_rrf,
         _q_hybrid_rrf_sql(),
         "hybrid retrieval: BM25 + cosine channels fused by integer RRF",
     ),
-    "q302_pack_nosplit": QuerySpec(
+    "a253_pack_nosplit": QuerySpec(
         q_pack_nosplit,
         _q_pack_nosplit_sql(),
         "no-split NFD sequence packing (shard-parallel, recursive-CTE oracle)",
@@ -7847,7 +7847,7 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_PACK_SEQUENCES_SQL,
         "concat-and-chunk sequence packing planner (sharded windows)",
     ),
-    "a203_dedup_clusters": QuerySpec(
+    "q350_dedup_clusters": QuerySpec(
         q_dedup_clusters,
         _q_dedup_clusters_sql(),
         "near-dup clustering: LSH pairs -> connected components",
@@ -7877,12 +7877,12 @@ QUERIES: dict[str, QuerySpec] = {
         _q_dedup_apply_sql(),
         "end-to-end dedup: LSH -> clusters -> keep one per cluster",
     ),
-    "a158_stream_dedup": QuerySpec(
+    "q326_stream_dedup": QuerySpec(
         q_stream_dedup,
         _Q_STREAM_DEDUP_SQL,
         "streaming dedup with watermark-bounded state",
     ),
-    "a195_dedup_clusters_star": QuerySpec(
+    "q342_dedup_clusters_star": QuerySpec(
         q_dedup_clusters_star,
         _q_dedup_clusters_star_sql(),
         "connected components via alternating star contraction",
@@ -7935,12 +7935,12 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_ATOMIC_PUBLISH_SQL,
         "manifest-pointer commit: killed writer, reader sees last snapshot",
     ),
-    "a180_diff_published": QuerySpec(
+    "q335_diff_published": QuerySpec(
         q_diff_published,
         _Q_DIFF_PUBLISHED_SQL,
         "version change feed: append fast path + exceptAll general path",
     ),
-    "q158_stream_kmv": QuerySpec(
+    "a226_stream_kmv": QuerySpec(
         q_stream_kmv,
         _q_stream_kmv_sql(),
         "streaming KMV maintenance: per-batch sketches published "
@@ -7950,14 +7950,14 @@ QUERIES: dict[str, QuerySpec] = {
     # end-to-end (q-name: outside the 50-slot driver window, judge-run)
     # r7 rotation (takes a54's window slot): the commit-protocol
     # streaming twin of a47 goes under the driver gate.
-    "a215_stream_quarantine": QuerySpec(
+    "q362_stream_quarantine": QuerySpec(
         q_stream_quarantine,
         _q_stream_quarantine_sql(),
         "constraint-gated dead-letter routing: one stream, two "
         "exactly-once published tables (good + quarantine with "
         "first-failing-check reasons)",
     ),
-    "a157_stream_publish": QuerySpec(
+    "q325_stream_publish": QuerySpec(
         q_stream_publish,
         _Q_STREAM_PUBLISH_SQL,
         "exactly-once streaming publish: batch-id dedup through the pointer",
@@ -7965,28 +7965,28 @@ QUERIES: dict[str, QuerySpec] = {
     # r7 addition: SemDeDup-shape semantic dedup (k-means cells +
     # within-cell integer-exact cosine pruning). Takes a57's window slot
     # (a57_mixture, driver-green since r4, retires to q66).
-    "a198_semantic_dedup": QuerySpec(
+    "q345_semantic_dedup": QuerySpec(
         q_semantic_dedup,
         _q_semantic_dedup_sql(n_probe=3),
         "semantic dedup: multi-probe k-means cells + exact-cosine "
         "keep-min-id",
     ),
-    "q320_html_extract": QuerySpec(
+    "a271_html_extract": QuerySpec(
         q_html_extract,
         _q_html_extract_sql(),
         "HTML→text curation: element drops, entity decode, title extract",
     ),
-    "q309_line_clean": QuerySpec(
+    "a260_line_clean": QuerySpec(
         q_line_clean,
         _q_line_clean_sql(),
         "line-level curation: min-word filter + within-doc line dedup",
     ),
-    "q307_mojibake": QuerySpec(
+    "a258_mojibake": QuerySpec(
         q_mojibake,
         _q_mojibake_sql(),
         "encoding QA: mojibake detection + literal repair",
     ),
-    "q306_mojibake_deep": QuerySpec(
+    "a257_mojibake_deep": QuerySpec(
         q_mojibake_deep,
         _q_mojibake_deep_sql(),
         "multi-round byte-level encoding repair (ftfy-shape kernel)",
@@ -8006,7 +8006,7 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_FUZZY_QGRAM_SQL,
         "q-gram prefix-filtered levenshtein fuzzy matching (general path)",
     ),
-    "a202_stream_join": QuerySpec(
+    "q349_stream_join": QuerySpec(
         q_stream_interval_join,
         _Q_STREAM_JOIN_SQL,
         "stream-stream interval join (funnel attribution, bounded state)",
@@ -8057,173 +8057,173 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     # r7 sketch family: mergeable fixed-size summaries (KMV / HLL /
     # count-min) + DSIR importance selection — all pure-BIGINT estimates.
-    "q312_kmv_distinct": QuerySpec(
+    "a263_kmv_distinct": QuerySpec(
         q_kmv_distinct,
         _q_kmv_sql(),
         "KMV k-minimum-values distinct sketch (integer estimate vs exact)",
     ),
-    "q310_kmv_set_algebra": QuerySpec(
+    "a261_kmv_set_algebra": QuerySpec(
         q_kmv_set_algebra,
         _q_kmv_set_algebra_sql(),
         "sketch set algebra: union/intersection/Jaccard from two KMV "
         "sketches",
     ),
-    "a182_funnel": QuerySpec(
+    "q336_funnel": QuerySpec(
         q_funnel,
         _Q_FUNNEL_SQL,
         "ordered funnel: strict first-occurrence stage sequencing",
     ),
-    "q182_token_drift": QuerySpec(
+    "a236_token_drift": QuerySpec(
         q_token_drift,
         _q_token_drift_sql(),
         "distribution-drift monitor: top token frequency movers in ppm",
     ),
-    "q322_gopher_rules": QuerySpec(
+    "a273_gopher_rules": QuerySpec(
         q_gopher_rules,
         _q_gopher_rules_sql(),
         "Gopher-style composite quality rules, integer-exact map-only gate",
     ),
-    "q175_pmi_pairs": QuerySpec(
+    "a235_pmi_pairs": QuerySpec(
         q_pmi_pairs,
         _q_pmi_pairs_sql(),
         "token-pair PMI via exact integer lift, a-priori-bounded self-join",
     ),
-    "q170_triangles": QuerySpec(
+    "a233_triangles": QuerySpec(
         q_triangles,
         _q_triangles_sql(),
         "triangle counting by degree-ordered orientation (O(m^1.5) wedges)",
     ),
-    "a188_bucket_anomalies": QuerySpec(
+    "q339_bucket_anomalies": QuerySpec(
         q_bucket_anomalies,
         _q_bucket_anomalies_sql(),
         "time-bucket volume anomalies: integer z-score test, no floats",
     ),
-    "q314_k_anonymize": QuerySpec(
+    "a265_k_anonymize": QuerySpec(
         q_k_anonymize,
         _q_k_anonymize_sql(),
         "k-anonymity suppression of small quasi-identifier classes",
     ),
-    "a179_bfs_khop": QuerySpec(
+    "q334_bfs_khop": QuerySpec(
         q_bfs_khop,
         _q_bfs_khop_sql(),
         "multi-source BFS hop levels: frontier expansion + visited anti-join",
     ),
-    "q313_k_core": QuerySpec(
+    "a264_k_core": QuerySpec(
         q_k_core,
         _q_k_core_sql(),
         "k-core peeling with in-band convergence certificate",
     ),
-    "q308_linear_probe": QuerySpec(
+    "a259_linear_probe": QuerySpec(
         q_linear_probe,
         _q_linear_probe_sql(),
         "linear probe training: exact fixed-point batch GD rounds",
     ),
-    "a191_event_transitions": QuerySpec(
+    "q340_event_transitions": QuerySpec(
         q_event_transitions,
         _q_event_transitions_sql(),
         "Markov event-transition matrix: lead() pairs, ppm row probs",
     ),
-    "a176_chunk_documents": QuerySpec(
+    "q333_chunk_documents": QuerySpec(
         q_chunk_documents,
         _q_chunk_documents_sql(),
         "overlapping RAG chunking: map-only sequence+substring, 0 shuffles",
     ),
-    "q160_wav_features": QuerySpec(
+    "a228_wav_features": QuerySpec(
         q_wav_features,
         _Q_WAV_FEATURES_SQL,
         "REAL WAV audio round-trip: JVM-built PCM16, stdlib-wave parse",
     ),
-    "q315_jl_project": QuerySpec(
+    "a266_jl_project": QuerySpec(
         q_jl_project,
         _q_jl_project_sql(),
         "JL sign projection: literal Rademacher matrix, map-only, exact",
     ),
-    "q164_winnow_fingerprints": QuerySpec(
+    "a229_winnow_fingerprints": QuerySpec(
         q_winnow_fingerprints,
         _q_winnow_sql(),
         "winnowing (MOSS) fingerprints: row-local HOFs, rightmost-min",
     ),
-    "q165_skipgram_cooc": QuerySpec(
+    "a230_skipgram_cooc": QuerySpec(
         q_skipgram_cooc,
         _q_skipgram_sql(),
         "skip-gram window co-occurrence: shifted-array zips, no self-join",
     ),
-    "q166_phrase_query": QuerySpec(
+    "a231_phrase_query": QuerySpec(
         q_phrase_query,
         _q_phrase_query_sql(),
         "positional-index phrase query: offset-aligned postings joins",
     ),
-    "q316_jl_ann": QuerySpec(
+    "a267_jl_ann": QuerySpec(
         q_jl_ann,
         _q_jl_ann_sql(),
         "two-stage ANN: JL integer prefilter, exact quantized re-rank",
     ),
-    "q304_near_query": QuerySpec(
+    "a255_near_query": QuerySpec(
         q_near_query,
         _q_near_query_sql(),
         "proximity NEAR/slop query: offset-enumerated bounded range join",
     ),
-    "q305_more_like_this": QuerySpec(
+    "a256_more_like_this": QuerySpec(
         q_more_like_this,
         _q_more_like_this_sql(),
         "sparse tf-idf more-like-this: df-pruned token join, integer dot",
     ),
-    "q303_ngram_diversity": QuerySpec(
+    "a254_ngram_diversity": QuerySpec(
         q_ngram_diversity,
         _q_ngram_diversity_sql(),
         "per-source bigram type/token ratio (ppm) — diversity monitor",
     ),
-    "q159_setsim_prefix": QuerySpec(
+    "a227_setsim_prefix": QuerySpec(
         q_setsim_prefix,
         _q_setsim_prefix_sql(),
         "AllPairs/PPJoin prefix-filtered exact Jaccard join vs brute oracle",
     ),
-    "q168_stream_drift": QuerySpec(
+    "a232_stream_drift": QuerySpec(
         q_stream_drift,
         _q_stream_drift_sql(),
         "streaming drift monitor: published partial counts == batch report",
     ),
-    "q317_incremental_agg": QuerySpec(
+    "a268_incremental_agg": QuerySpec(
         q_incremental_agg,
         _Q_INCREMENTAL_AGG_SQL,
         "O(delta) materialized-view refresh from the publish change feed",
     ),
-    "q172_poisson_bootstrap": QuerySpec(
+    "a234_poisson_bootstrap": QuerySpec(
         q_poisson_bootstrap,
         _q_poisson_bootstrap_sql(),
         "one-pass Poisson bootstrap: 16 deterministic replicate means",
     ),
-    "a187_cohort_retention": QuerySpec(
+    "q338_cohort_retention": QuerySpec(
         q_cohort_retention,
         _q_cohort_retention_sql(),
         "cohort retention matrix: first-seen buckets x offset, integer ppm",
     ),
-    "q185_pr_normalize": QuerySpec(
+    "a237_pr_normalize": QuerySpec(
         q_pr_normalize,
         _q_pr_normalize_sql(),
         "per-slice percentile-rank score normalization (integer ppm)",
     ),
-    "a155_hll_distinct": QuerySpec(
+    "q323_hll_distinct": QuerySpec(
         q_hll_distinct,
         _q_hll_sql(),
         "HyperLogLog (64 registers, integer harmonic + linear counting)",
     ),
-    "a166_countmin": QuerySpec(
+    "q330_countmin": QuerySpec(
         q_countmin,
         _q_countmin_sql(),
         "count-min sketch point estimates vs true counts (3x1024 cells)",
     ),
-    "a167_dsir_select": QuerySpec(
+    "q331_dsir_select": QuerySpec(
         q_dsir_select,
         _q_dsir_sql(),
         "DSIR importance selection (hashed-ngram integer LLR ranking)",
     ),
-    "a161_leakage_split": QuerySpec(
+    "q329_leakage_split": QuerySpec(
         q_leakage_split,
         _q_leakage_split_sql(),
         "leakage-safe split (near-dup clusters move between splits whole)",
     ),
-    "a168_bloom_prune": QuerySpec(
+    "q332_bloom_prune": QuerySpec(
         q_bloom_prune,
         _q_bloom_sql(),
         "Bloom-filter join pruning (row-local probe vs exact semi-join)",
@@ -8235,7 +8235,7 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     # r11 rotation: retired from the window (green x3, shallowest eligible
     # resident per rotation_report); slug "skew_report" preserved.
-    "q241_skew_report": QuerySpec(
+    "a252_skew_report": QuerySpec(
         q_skew_report,
         _Q_SKEW_SQL,
         "shuffle-skew pre-flight (hot keys, ppm share, salt factor)",
@@ -8256,121 +8256,121 @@ QUERIES: dict[str, QuerySpec] = {
         _q_containment_sketch_sql(),
         "bottom-k containment screen (Mash-style estimator, exact replay)",
     ),
-    "a204_containment_screened": QuerySpec(
+    "q351_containment_screened": QuerySpec(
         q_containment_screened,
         _q_containment_screened_sql(),
         "screen->exact containment composition (sketch survivors feed "
         "the exact prefix join)",
     ),
-    "a205_containment_skew": QuerySpec(
+    "q352_containment_skew": QuerySpec(
         q_containment_skew,
         _q_containment_skew_sql(),
         "hot/cold split containment join on a boilerplate-skewed corpus "
         "(hot postings never shuffle by key)",
     ),
-    "a206_priority_sample": QuerySpec(
+    "q353_priority_sample": QuerySpec(
         q_priority_sample,
         _q_priority_sample_sql(),
         "priority sampling (DLT): weighted top-k draw + unbiased "
         "subset-sum estimators, exact SQL replay",
     ),
-    "a207_mg_heavy_hitters": QuerySpec(
+    "q354_mg_heavy_hitters": QuerySpec(
         q_mg_heavy_hitters,
         _q_mg_heavy_hitters_sql(),
         "self-certifying Misra-Gries heavy hitters: screened candidates "
         "+ exact recount, provably exact top-k",
     ),
-    "a208_frame_sample": QuerySpec(
+    "q355_frame_sample": QuerySpec(
         q_frame_sample,
         _Q_FRAME_SAMPLE_SQL,
         "video frame-sampling plan: metadata-only sequence+explode, "
         "payload column pruned, md5 frame keys",
     ),
-    "a209_mmr_select": QuerySpec(
+    "q356_mmr_select": QuerySpec(
         q_mmr_select,
         _q_mmr_select_sql(),
         "greedy MMR diverse selection (int64-exact, oracle replays all "
         "k rounds)",
     ),
-    "a210_grouped_priority_sample": QuerySpec(
+    "q357_grouped_priority_sample": QuerySpec(
         q_grouped_priority_sample,
         _q_grouped_priority_sample_sql(),
         "stratified DLT priority sampling: per-group draw + per-group "
         "unbiased estimators in one window pass",
     ),
-    "a211_join_cardinality": QuerySpec(
+    "q358_join_cardinality": QuerySpec(
         q_join_cardinality,
         _q_join_cardinality_sql(),
         "join-size pre-flight: unbiased key-sampled estimate of "
         "|lineitem JOIN orders| with the exact error alongside",
     ),
-    "a224_group_normalize": QuerySpec(
+    "q371_group_normalize": QuerySpec(
         q_group_normalize,
         _q_group_normalize_sql(),
         "per-group percent-rank + min-max normalization of totalprice "
         "within priority classes, exact integer ppm",
     ),
-    "a223_threshold_sweep": QuerySpec(
+    "q370_threshold_sweep": QuerySpec(
         q_threshold_sweep,
         _q_threshold_sweep_sql(),
         "operating-point sweep: confusion counts + P/R/F1 ppm for the "
         "linear probe at 5 thresholds, one aggregate pass",
     ),
-    "a222_mutual_knn": QuerySpec(
+    "q369_mutual_knn": QuerySpec(
         q_mutual_knn,
         _q_mutual_knn_sql(),
         "mutual kNN graph: reciprocal top-5 inner-product edges on "
         "the label-0/1 embedding slice",
     ),
-    "a221_score_calibration": QuerySpec(
+    "q368_score_calibration": QuerySpec(
         q_score_calibration,
         _q_score_calibration_sql(),
         "binned reliability table: 10-bin positive rates + localized "
         "monotonicity violations for an int64 linear probe",
     ),
-    "a220_vocab_top_p": QuerySpec(
+    "q367_vocab_top_p": QuerySpec(
         q_vocab_top_p,
         _q_vocab_top_p_sql(),
         "nucleus vocab truncation: smallest per-language token set "
         "covering 80% of token mass, division-free keep rule",
     ),
-    "a219_rate_limit": QuerySpec(
+    "q366_rate_limit": QuerySpec(
         q_rate_limit,
         _Q_RATE_LIMIT_SQL,
         "sliding-log rate limiter replay: per-type throttle rates for "
         "4 events / 24h per user, tie-deterministic RANGE frame",
     ),
-    "a218_embedding_diversity": QuerySpec(
+    "q365_embedding_diversity": QuerySpec(
         q_embedding_diversity,
         _q_embedding_diversity_sql(),
         "per-label embedding diversity from one-pass integer moments "
         "(no pairwise join)",
     ),
-    "a217_doc_chunks": QuerySpec(
+    "q364_doc_chunks": QuerySpec(
         q_doc_chunks,
         _q_doc_chunks_sql(),
         "RAG chunking: overlapping token windows over documents, "
         "JVM-side explode/slice, md5 chunk keys",
     ),
-    "a216_robust_stats": QuerySpec(
+    "q363_robust_stats": QuerySpec(
         q_robust_stats,
         _q_robust_stats_sql(),
         "robust grouped means: plain/trimmed/winsorized o_totalprice "
         "per priority, one shuffle, exact decimal sums",
     ),
-    "a214_fd_profile": QuerySpec(
+    "q361_fd_profile": QuerySpec(
         q_fd_profile,
         _q_fd_profile_sql(),
         "functional-dependency profiling: majority-agreement ppm for "
         "three declared FDs on orders (holds / violated / composite)",
     ),
-    "a213_zonemap_pruning": QuerySpec(
+    "q360_zonemap_pruning": QuerySpec(
         q_zonemap_pruning,
         _q_zonemap_pruning_sql(),
         "zone-map skip report: file/row skip rates for a 2-D box "
         "predicate under bycol_a/bycol_b/zorder layouts of orders",
     ),
-    "a212_constraint_suite": QuerySpec(
+    "q359_constraint_suite": QuerySpec(
         q_constraint_suite,
         _q_constraint_suite_sql(),
         "Deequ-style constraint suite: 7 declared quality checks "
@@ -8382,17 +8382,17 @@ QUERIES: dict[str, QuerySpec] = {
         _q_containment_dedup_sql(),
         "containment dedup applied: drop docs subsumed by a greater doc",
     ),
-    "q151_pagerank": QuerySpec(
+    "a225_pagerank": QuerySpec(
         q_pagerank,
         _q_pagerank_sql(),
         "weighted PageRank over event transitions (integer fixed point)",
     ),
-    "q311_kmv_merge": QuerySpec(
+    "a262_kmv_merge": QuerySpec(
         q_kmv_merge,
         _q_kmv_merge_sql(),
         "KMV sketch merge == direct sketch (mergeability identity)",
     ),
-    "q321_hist_quantiles": QuerySpec(
+    "a272_hist_quantiles": QuerySpec(
         q_hist_quantiles,
         _q_hist_quantiles_sql(),
         "mergeable log-bucket quantile sketch (est vs exact, <=4.4% err)",
