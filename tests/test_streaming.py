@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import os
+import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.test_xml_source import PRODUCTS_XML
@@ -15,11 +17,39 @@ from xml_to_parquet_spark.streaming import (
 SF = "/root/testdata/sf0.001"
 
 
-def test_streaming_window_equals_batch(spark):
+@pytest.fixture
+def scratch_made(monkeypatch, tmp_path):
+    """Points the scratch base into ``tmp_path`` (a subdir, so that no
+    scratch lands in a test's stream source dir) and records every dir
+    that ``tempfile.mkdtemp`` makes while the test runs."""
+    base = tmp_path / "scratch"
+    base.mkdir()
+    made: list[str] = []
+    mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(base))
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    return made
+
+
+def _assert_checkpoints_removed(made: list[str], tmp_path) -> None:
+    assert made and all(
+        os.path.dirname(d) == str(tmp_path / "scratch") for d in made
+    )
+    ckpts = [d for d in made if os.path.basename(d).startswith("ckpt_")]
+    assert ckpts and not any(os.path.exists(d) for d in ckpts)
+
+
+def test_streaming_window_equals_batch(spark, scratch_made, tmp_path):
     from xml_to_parquet_spark.catalog import load_table
     from xml_to_parquet_spark.operators.aggregation import dsum
 
     streamed = stream_events_windowed(spark, SF).collect()
+    _assert_checkpoints_removed(scratch_made, tmp_path)
 
     ev = load_table(spark, SF, "events")
     batch = (
@@ -61,7 +91,7 @@ def test_streaming_xml_exactly_once(spark, tmp_path):
     assert len(by_file["a.xml"]) == 3 and len(by_file["b.xml"]) == 3
 
 
-def test_stream_dedup_drops_duplicates(spark, tmp_path):
+def test_stream_dedup_drops_duplicates(spark, tmp_path, scratch_made):
     import pandas as pd
 
     from xml_to_parquet_spark.streaming.file_stream import stream_events_dedup
@@ -85,6 +115,7 @@ def test_stream_dedup_drops_duplicates(spark, tmp_path):
     out = stream_events_dedup(spark, str(tmp_path)).collect()[0]
     # 3 distinct keys survive; duplicate arrivals are suppressed by state
     assert (out.n_rows, out.n_keys) == (3, 3)
+    _assert_checkpoints_removed(scratch_made, tmp_path)
 
 
 def test_stream_interval_join_matches_batch(spark, tmp_path):

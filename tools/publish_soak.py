@@ -16,9 +16,7 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -48,63 +46,60 @@ def main() -> None:
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
-    from xml_to_parquet_spark.session import set_log_level
+    from xml_to_parquet_spark.session import scratch_dir, set_log_level
 
     set_log_level(spark, "ERROR")
     spark.createDataFrame([(1,)], "x int").count()
 
-    base = tempfile.mkdtemp(
-        prefix="pubsoak_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    batch = spark.range(1000).select(
-        F.col("id"), (F.col("id") % 7).alias("v")
-    )
-    checkpoints = (16, 32, 64, 128, 256, 512)
+    # block-lifetime scratch: removed also when a rung raises
+    with scratch_dir("pubsoak_") as base:
+        batch = spark.range(1000).select(
+            F.col("id"), (F.col("id") % 7).alias("v")
+        )
+        checkpoints = (16, 32, 64, 128, 256, 512)
 
-    for variant, compact_every in (("unbounded", None), ("compact16", 16)):
-        root = os.path.join(base, variant)
-        t_commit = 0.0
-        manifest_bytes = 0
-        for i in range(1, n + 1):
-            if compact_every is not None:
-                cur = current_manifest(root)
-                if cur and len(cur["data_dirs"]) >= compact_every:
-                    compact_published(spark, root)
-            t0 = time.time()
-            publish_parquet(
-                batch, root, mode="append", single_file=True
-            )
-            t_commit += time.time() - t0
-            if i in checkpoints or i == n:
-                mdir = os.path.join(root, "_manifests")
-                manifest_bytes = sum(
-                    os.path.getsize(os.path.join(mdir, f))
-                    for f in os.listdir(mdir)
-                )
+        for variant, compact_every in (("unbounded", None), ("compact16", 16)):
+            root = os.path.join(base, variant)
+            t_commit = 0.0
+            manifest_bytes = 0
+            for i in range(1, n + 1):
+                if compact_every is not None:
+                    cur = current_manifest(root)
+                    if cur and len(cur["data_dirs"]) >= compact_every:
+                        compact_published(spark, root)
                 t0 = time.time()
-                rows = read_published(spark, root).count()
-                t_read = time.time() - t0
-                print(
-                    json.dumps(
-                        {
-                            "variant": variant,
-                            "chain": i,
-                            "rows": rows,
-                            "dirs": len(
-                                current_manifest(root)["data_dirs"]
-                            ),
-                            "commit_s_total": round(t_commit, 2),
-                            "read_s": round(t_read, 2),
-                            "manifest_mb": round(
-                                manifest_bytes / 1e6, 3
-                            ),
-                        },
-                        separators=(",", ":"),
-                    ),
-                    flush=True,
+                publish_parquet(
+                    batch, root, mode="append", single_file=True
                 )
-    shutil.rmtree(base, ignore_errors=True)
+                t_commit += time.time() - t0
+                if i in checkpoints or i == n:
+                    mdir = os.path.join(root, "_manifests")
+                    manifest_bytes = sum(
+                        os.path.getsize(os.path.join(mdir, f))
+                        for f in os.listdir(mdir)
+                    )
+                    t0 = time.time()
+                    rows = read_published(spark, root).count()
+                    t_read = time.time() - t0
+                    print(
+                        json.dumps(
+                            {
+                                "variant": variant,
+                                "chain": i,
+                                "rows": rows,
+                                "dirs": len(
+                                    current_manifest(root)["data_dirs"]
+                                ),
+                                "commit_s_total": round(t_commit, 2),
+                                "read_s": round(t_read, 2),
+                                "manifest_mb": round(
+                                    manifest_bytes / 1e6, 3
+                                ),
+                            },
+                            separators=(",", ":"),
+                        ),
+                        flush=True,
+                    )
 
 
 if __name__ == "__main__":

@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from xml_to_parquet_spark.functions.text import fingerprint_md5, norm_text
+from xml_to_parquet_spark.session import process_scratch_dir, scoped_conf
 
 # MinHash parameters. Permutation constants (a,b) are generated from a
 # fixed linear-congruential recurrence so both engines can regenerate them;
@@ -99,31 +100,20 @@ def word_shingles(col: Column, n: int = 3) -> Column:
 
 def materialize_parquet(df: DataFrame, prefix: str = "mat_") -> DataFrame:
     """Write-then-read freeze for a multiply-consumed corpus-scale
-    intermediate — the scale-safe replacement for ``localCheckpoint``
-    (VERDICT r13 item 3): nothing is pinned in executor memory, an
-    executor loss costs a partial re-read of replicated storage instead
-    of fail-stopping the query, and every consumer scans compact
-    columnar files instead of replaying the build subtree (which AQE's
-    runtime stage reuse does NOT reliably share across differently-
-    pruned branches — measured r14: the unmaterialized 4-consumer
-    postings plan cost +35-90% CPU).
+    intermediate — the scale-safe replacement for ``localCheckpoint``:
+    nothing is pinned in executor memory, an executor loss costs a
+    partial re-read of replicated storage instead of fail-stopping the
+    query, and every consumer scans compact columnar files instead of
+    replaying the build subtree (which AQE's runtime stage reuse does
+    NOT reliably share across differently-pruned branches — measured:
+    the unmaterialized 4-consumer postings plan cost +35-90% CPU).
 
-    The tempdir is per-call (never shared across queries or trials — a
-    fresh invocation always recomputes from its inputs) and removed at
-    interpreter exit. Local default is tmpfs; ``SPARK_GRAFT_SCRATCH``
-    points it at real scratch storage (a cluster deployment passes a
-    durable shared path — the write is an ordinary parquet job there).
+    The dir is per-call (never shared across queries or trials — a
+    fresh invocation always recomputes from its inputs) and is
+    process-lifetime scratch from :func:`session.process_scratch_dir`,
+    since the returned frame reads it lazily.
     """
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    base = os.environ.get("SPARK_GRAFT_SCRATCH") or (
-        "/dev/shm" if os.path.isdir("/dev/shm") else None
-    )
-    tmp = tempfile.mkdtemp(prefix=prefix, dir=base)
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = process_scratch_dir(prefix)
     df.write.mode("overwrite").parquet(tmp)
     return df.sparkSession.read.parquet(tmp)
 
@@ -1300,9 +1290,7 @@ def dedup_clusters(
         ).collect()[0]
         return nxt, (chk["n"], chk["h"])
 
-    prev_conf = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", state_parts):
         prev_chk = None
         converged = False
         for _ in range(iterations):
@@ -1317,11 +1305,6 @@ def dedup_clusters(
             # labels is partial
             _, cur = _round(labels)
             converged = cur == prev_chk
-    finally:
-        if prev_conf is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     if not converged:
         if on_unconverged == "raise":
             raise ValueError(
@@ -1472,8 +1455,8 @@ def dedup_clusters_star(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # r14-opt (VERDICT r13 item 2): per-round shuffles sized to the
-    # (shrinking) edge set, not the core count — see dedup_clusters
+    # per-round shuffles sized to the (shrinking) edge set, not the core
+    # count — see dedup_clusters
     n_edges = edges.count()
     sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     state_parts = max(1, min(sess_parts, n_edges // 2_000_000 + 1))
@@ -1486,9 +1469,7 @@ def dedup_clusters_star(
         .distinct()
     )
 
-    prev_conf = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", state_parts):
         prev_chk = None
         for _ in range(max_rounds):
             edges = _small_star(_large_star(edges)).localCheckpoint(
@@ -1504,11 +1485,6 @@ def dedup_clusters_star(
             if cur == prev_chk:
                 break
             prev_chk = cur
-    finally:
-        if prev_conf is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
 
     # converged edges are stars (node > root): label = min root per node
     labeled = edges.groupBy("u").agg(F.min("v").alias("label")).select(

@@ -205,6 +205,7 @@ def bpe_learn_merges(
     from pyspark.sql import functions as F
 
     from xml_to_parquet_spark.functions.text import norm_text
+    from xml_to_parquet_spark.session import scoped_conf
 
     spark = df.sparkSession
     words = (
@@ -224,19 +225,17 @@ def bpe_learn_merges(
         # count below sizes the per-round shuffles
         .localCheckpoint(eager=True)
     )
-    # r14-opt (VERDICT r13 item 2): per-round pair-count shuffles sized
-    # to the VOCABULARY (one partition per ~500k words, capped by the
-    # session setting), not the core count — the word table is tiny
-    # relative to the corpus, and core-proportional task counts per
-    # round only multiply scheduler/codegen overhead (guide §2/§5)
+    # per-round pair-count shuffles sized to the VOCABULARY (one
+    # partition per ~500k words, capped by the session setting), not the
+    # core count — the word table is tiny relative to the corpus, and
+    # core-proportional task counts per round only multiply
+    # scheduler/codegen overhead (guide §2/§5)
     n_words = words.count()
     sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     state_parts = max(1, min(sess_parts, n_words // 500_000 + 1))
     merges: list[tuple[str, str, int]] = []
     cur = words
-    prev_conf = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", state_parts):
         for _ in range(num_merges):
             best = (
                 cur.select(
@@ -278,11 +277,6 @@ def bpe_learn_merges(
                 ).alias("marked"),
                 "freq",
             ).localCheckpoint(eager=False)
-    finally:
-        if prev_conf is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     return merges
 
 

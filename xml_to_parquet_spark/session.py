@@ -12,11 +12,19 @@ session settings transfer to a multi-executor cluster:
 - for ``local[...]`` masters, Python workers start from
   :mod:`xml_to_parquet_spark.worker_daemon`, which stops every task from
   re-reading ``pyspark.zip``'s central directory
+
+It also owns the two per-query resources the package scopes itself:
+session conf overrides (:func:`scoped_conf`) and scratch directories
+(:func:`scratch_dir`, :func:`process_scratch_dir`).
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -125,9 +133,6 @@ def _jvm_exports(path: str) -> bool:
     return path in launched.split(os.pathsep)
 
 
-from contextlib import contextmanager
-
-
 @contextmanager
 def quiet_jvm_logs(spark: SparkSession, level: str = "OFF"):
     """Temporarily raise the JVM log level around an EXPECTED failure.
@@ -137,9 +142,9 @@ def quiet_jvm_logs(spark: SparkSession, level: str = "OFF"):
     micro-batch (the transformWithState AvailableNow stop — Spark plans
     empty batches forever, so the harness must stop mid-plan). Both used
     to dump multi-screen ERROR stack traces into bench/driver stderr —
-    accepted noise a REAL stream failure could hide inside (VERDICT r10
-    item 4). Muting is scoped in TIME to the expected-failure window, not
-    by logger class, so genuine errors outside these windows still print;
+    accepted noise a REAL stream failure could hide inside. Muting is
+    scoped in TIME to the expected-failure window, not by logger class,
+    so genuine errors outside these windows still print;
     the bench gate asserts stderr is ERROR-free, which only this windowed
     mute makes possible without masking anything else."""
     sc = spark.sparkContext
@@ -169,6 +174,58 @@ def set_log_level(spark: SparkSession, level: str) -> None:
     muted catalog entry (atomic publish, TWS stop) may run later."""
     spark.sparkContext.setLogLevel(level)
     spark._xtp_log_level = level
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value):
+    """Set session conf ``key`` to ``value`` for the block only.
+
+    On exit, also when the block raises, the prior value comes back; a
+    key that had no value is unset rather than left holding the
+    override, so a later batch job on the shared session never sees it.
+    """
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+        else:
+            spark.conf.unset(key)
+
+
+def _new_scratch(prefix: str) -> str:
+    """A fresh dir under the scratch base: ``SPARK_GRAFT_SCRATCH`` when
+    set (read per call), else tmpfs, else the default temp dir. Scratch
+    here is ephemeral by construction (streaming checkpoints, publish
+    roots, frozen intermediates), so the fsyncs a disk would pay buy
+    nothing; a cluster deployment points the variable at shared storage.
+    """
+    base = os.environ.get("SPARK_GRAFT_SCRATCH") or (
+        "/dev/shm" if os.path.isdir("/dev/shm") else None
+    )
+    return tempfile.mkdtemp(prefix=prefix, dir=base)
+
+
+@contextmanager
+def scratch_dir(prefix: str):
+    """Block-lifetime scratch dir, removed when the block exits: for
+    checkpoints and publish roots whose results are collected inside."""
+    path = _new_scratch(prefix)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def process_scratch_dir(prefix: str) -> str:
+    """Process-lifetime scratch dir, removed at interpreter exit: for
+    dirs that back a lazily returned frame, which may be read any time
+    after the call that wrote them."""
+    path = _new_scratch(prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def _ship_package(spark: SparkSession) -> None:

@@ -23,86 +23,75 @@ store is RocksDB-backed on a real cluster (set
 from __future__ import annotations
 
 import os
-import tempfile
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from xml_to_parquet_spark.session import (
+    process_scratch_dir,
+    quiet_jvm_logs,
+    scoped_conf,
+    scratch_dir,
+)
+
+_SHUFFLE = "spark.sql.shuffle.partitions"
+# shuffle partitions scoped to a stateful stream: it materializes one
+# state store PER shuffle partition PER micro-batch, so a tiny windowed
+# agg pays 32 store commits per batch under the batch-tuned default.
+# The count is pinned at the stream's first checkpoint anyway (a real
+# deployment sizes it to its key cardinality, apart from batch jobs).
+# 4 measured best-of-2 on the sf0.1 event stream against 8 (windowed
+# 1.54→1.36 s, dedup 1.49→1.38 s, stream-stream join 2.83→2.40 s): the
+# testdata's key cardinality does not feed 8 stores.
+_STATE_PARTITIONS = 4
 
 
 def run_available_now(
     stream_df: DataFrame,
     query_name: str,
     output_mode: str = "complete",
-    checkpoint_dir: str | None = None,
-    state_partitions: int | None = 4,
+    state_partitions: int = _STATE_PARTITIONS,
 ) -> DataFrame:
     """Run a streaming frame to completion (AvailableNow); returns the
     final result as a batch DataFrame.
 
-    Sink choice scales with the output mode (r6 — the events250 soak rung
-    found the old always-memory sink collecting a 25M-row APPEND result
-    onto the driver, breaching spark.driver.maxResultSize; the operator's
-    state was fine, the harness sink wasn't):
+    Sink choice scales with the output mode (an always-memory sink would
+    collect a 25M-row APPEND result onto the driver and breach
+    spark.driver.maxResultSize, although the operator's state was fine):
     - ``complete`` mode results are aggregates (bounded by group count) →
       memory sink, as a real dashboard sink would hold them;
     - ``append`` mode results are row streams (unbounded) → parquet sink
-      in the checkpoint's tmpfs, read back as a batch frame — exactly the
-      sink shape a production append stream uses, at any scale.
+      in process-lifetime scratch, read back as a batch frame — exactly
+      the sink shape a production append stream uses, at any scale.
 
     ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` to this
-    query: a stateful stream materializes one state store PER shuffle
-    partition PER micro-batch, so a tiny windowed agg pays 32 store
-    commits/batch under the batch-tuned default. The stream's partition
-    count is pinned at its first checkpoint anyway (this is the knob a real
-    deployment sizes to its key cardinality, independent of batch jobs).
-    Default 4 (was 8): measured best-of-2 on the sf0.1 event stream —
-    windowed 1.54→1.36 s, dedup 1.49→1.38 s, stream-stream join
-    2.83→2.40 s; the testdata's key cardinality doesn't feed 8 stores.
+    query (see ``_STATE_PARTITIONS``). The checkpoint lives in scratch
+    and is removed on return: an ephemeral AvailableNow run has nothing
+    to resume.
     """
-    # checkpoint on tmpfs when available: the state store fsyncs delta files
-    # per micro-batch, and for an ephemeral AvailableNow run the durability
-    # of a disk checkpoint buys nothing (a real deployment points this at
-    # HDFS/S3 via the checkpoint_dir argument)
-    ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(
-        prefix="ckpt_", dir=ckpt_base
-    )
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    sink_dir = None
-    try:
+    with scratch_dir("ckpt_") as checkpoint_dir, scoped_conf(
+        spark, _SHUFFLE, state_partitions
+    ):
         if output_mode == "append":
-            sink_dir = tempfile.mkdtemp(prefix="sink_", dir=ckpt_base)
-            q = (
-                stream_df.writeStream.format("parquet")
-                .option("path", sink_dir)
-                .outputMode("append")
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start()
+            sink_dir = process_scratch_dir("sink_")
+            writer = stream_df.writeStream.format("parquet").option(
+                "path", sink_dir
             )
         else:
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start()
+            writer = stream_df.writeStream.format("memory").queryName(
+                query_name
             )
+        q = (
+            writer.outputMode(output_mode)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
         q.awaitTermination()
-    finally:
-        if state_partitions is not None:
-            if prev is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-            else:
-                # no previous value: unset rather than leak the override of 8
-                # into subsequent batch jobs on the shared session
-                spark.conf.unset("spark.sql.shuffle.partitions")
-    if sink_dir is not None:
+    if output_mode == "append":
         # explicit schema: an empty append result leaves no data files
         return spark.read.schema(stream_df.schema).parquet(sink_dir)
     return spark.table(query_name)
@@ -111,7 +100,6 @@ def run_available_now(
 def run_tws_append(
     stream_df: DataFrame,
     query_name: str,
-    state_partitions: int | None = 4,
     input_glob: str | None = None,
 ) -> DataFrame:
     """AvailableNow harness for ``transformWithStateInPandas`` queries.
@@ -121,21 +109,20 @@ def run_tws_append(
     commits — the sink manifest lands, results are readable — but the
     trigger executor never reaches the terminated state; worse, it keeps
     PLANNING empty batches indefinitely, so checkpoint-quiescence waiting
-    never converges — measured r7: the offsets log reached batch 411 in
-    300 s with no further input). So this runner waits for the
-    FileStreamSink's batch-0 commit manifest and stops the query.
+    never converges: the offsets log reached batch 411 in 300 s with no
+    further input). So this runner waits for the FileStreamSink's
+    batch-0 commit and stops the query.
 
     Single-DATA-batch sources only: all input must land in batch 0, which
-    the file source guarantees for one input file. The assumption is now
-    ENFORCED, not just documented (r7 ADVICE fix): pass ``input_glob``
-    and the runner raises before starting unless it resolves to exactly
-    one DATA FILE — a directory match (e.g. a multi-part
-    ``events.parquet`` directory) is expanded to its data files first
-    (r8 ADVICE fix: a one-match glob over a many-part directory could
+    the file source guarantees for one input file. The assumption is
+    enforced: pass ``input_glob`` and the runner raises before starting
+    unless it resolves to exactly one DATA FILE — a directory match (e.g.
+    a multi-part ``events.parquet`` directory) is expanded to its data
+    files first, since a one-match glob over a many-part directory could
     still be packed into several AvailableNow batches whose data the
-    batch-0 stop would drop).
+    batch-0 stop would drop.
 
-    Stop mechanism (r8): a ``StreamingQueryListener`` signals the first
+    Stop mechanism: a ``StreamingQueryListener`` signals the first
     data-carrying batch commit (progress events fire after the sink +
     offset-log commit), so the harness is event-driven; the batch-0
     sink-manifest poll is retained inside the same wait loop as a
@@ -155,63 +142,53 @@ def run_tws_append(
                 f"{len(files)} data files"
             )
 
-    ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    checkpoint_dir = tempfile.mkdtemp(prefix="ckpt_", dir=ckpt_base)
-    sink_dir = tempfile.mkdtemp(prefix="sink_", dir=ckpt_base)
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    sink_dir = process_scratch_dir("sink_")
     committed = threading.Event()
-    listener = None
     try:
         listener = _first_data_batch_listener(committed)
         spark.streams.addListener(listener)
     except Exception:  # pragma: no cover - callback server unavailable
         listener = None
     try:
-        q = (
-            stream_df.writeStream.format("parquet")
-            .queryName(query_name)
-            .option("path", sink_dir)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if listener is not None:
-            listener.query_id = str(q.id)
-        manifest = os.path.join(sink_dir, "_spark_metadata", "0")
-        deadline = time.time() + 300
-        while time.time() < deadline:
-            if q.exception():
-                raise q.exception()
-            # event-driven primary: the listener fires when the first
-            # data-carrying batch has fully committed (sink + offset log)
-            if committed.wait(timeout=0.2) or os.path.exists(manifest):
-                break
-        else:  # pragma: no cover - hang guard
-            raise TimeoutError(f"{query_name}: no sink commit within 300s")
-        # stopping here interrupts whatever EMPTY batch TWS is planning
-        # (it never stops planning them) — the interrupt is the designed
-        # shutdown, so mute the JVM's InterruptedException stack trace
-        # for exactly this window (VERDICT r10 item 4)
-        from xml_to_parquet_spark.session import quiet_jvm_logs
-
-        with quiet_jvm_logs(spark):
-            q.stop()
-            q.awaitTermination()
+        with scratch_dir("ckpt_") as checkpoint_dir, scoped_conf(
+            spark, _SHUFFLE, _STATE_PARTITIONS
+        ):
+            q = (
+                stream_df.writeStream.format("parquet")
+                .queryName(query_name)
+                .option("path", sink_dir)
+                .outputMode("append")
+                .option("checkpointLocation", checkpoint_dir)
+                .trigger(availableNow=True)
+                .start()
+            )
+            if listener is not None:
+                listener.query_id = str(q.id)
+            manifest = os.path.join(sink_dir, "_spark_metadata", "0")
+            deadline = time.time() + 300
+            while time.time() < deadline:
+                if q.exception():
+                    raise q.exception()
+                # event-driven primary: the listener fires when the first
+                # data-carrying batch has fully committed (sink + offset log)
+                if committed.wait(timeout=0.2) or os.path.exists(manifest):
+                    break
+            else:  # pragma: no cover - hang guard
+                raise TimeoutError(f"{query_name}: no sink commit within 300s")
+            # stopping here interrupts whatever EMPTY batch TWS is planning
+            # (it never stops planning them) — the interrupt is the designed
+            # shutdown, so mute the JVM's InterruptedException stack trace
+            # for exactly this window
+            with quiet_jvm_logs(spark):
+                q.stop()
+                q.awaitTermination()
     finally:
         if listener is not None:
             try:
                 spark.streams.removeListener(listener)
             except Exception:  # pragma: no cover
                 pass
-        if state_partitions is not None:
-            if prev is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-            else:
-                spark.conf.unset("spark.sql.shuffle.partitions")
     return spark.read.schema(stream_df.schema).parquet(sink_dir)
 
 
@@ -493,9 +470,6 @@ def stream_events_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch oracle. Ephemeral root/checkpoint on tmpfs — the catalog entry
     exercises the protocol, not durable storage.
     """
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from xml_to_parquet_spark.operators.aggregation import dsum
     from xml_to_parquet_spark.sinks.publish import (
         publish_stream,
@@ -509,11 +483,8 @@ def stream_events_published(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
     ).select("event_id", "event_type", "value")
 
-    base = _tempfile.mkdtemp(
-        prefix="pub_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None
-    )
-    root = os.path.join(base, "events_pub")
-    try:
+    with scratch_dir("pub_") as base:
+        root = os.path.join(base, "events_pub")
         publish_stream(
             ev, root, checkpoint_dir=os.path.join(base, "ckpt")
         )
@@ -529,8 +500,6 @@ def stream_events_published(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the published root is ephemeral: materialize before cleanup
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 def stream_events_quarantined(
@@ -550,9 +519,6 @@ def stream_events_quarantined(
     routed under the wrong reason all change the numbers and fail the
     batch oracle (which replays the gate as a CASE over raw events).
     """
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from xml_to_parquet_spark.functions import constraints as C
     from xml_to_parquet_spark.operators.aggregation import dsum
     from xml_to_parquet_spark.sinks.publish import (
@@ -574,12 +540,9 @@ def stream_events_quarantined(
         .parquet(sf_dir)
     ).select("event_id", "event_type", "value")
 
-    base = _tempfile.mkdtemp(
-        prefix="dlq_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None
-    )
-    good_root = os.path.join(base, "events_good")
-    quar_root = os.path.join(base, "events_quarantine")
-    try:
+    with scratch_dir("dlq_") as base:
+        good_root = os.path.join(base, "events_good")
+        quar_root = os.path.join(base, "events_quarantine")
         q = (
             ev.writeStream.foreachBatch(
                 quarantine_router(checks, good_root, quar_root)
@@ -614,14 +577,12 @@ def stream_events_quarantined(
         )
         # the published roots are ephemeral: materialize before cleanup
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 def stream_events_kmv(
     spark: SparkSession, sf_dir: str, k: int = 64, n_splits: int = 4
 ) -> DataFrame:
-    """Continuous distinct-count maintenance (r8): each micro-batch
+    """Continuous distinct-count maintenance: each micro-batch
     sketches its slice of the events stream (per-event_type KMV rows, ≤k
     smallest 52-bit hashes per group) and append-publishes the SKETCH
     ROWS through the exactly-once commit sink; the reader merges all
@@ -640,9 +601,6 @@ def stream_events_kmv(
     (maxFilesPerTrigger=1); ``multi_batch`` pins that ≥2 commits
     actually happened.
     """
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from xml_to_parquet_spark.functions.sketches import (
         HASH52_MAX,
         md5_hash52,
@@ -659,16 +617,11 @@ def stream_events_kmv(
         .parquet(os.path.join(sf_dir, "events.parquet"))
         .select("event_id", "event_type")
     )
-    base = _tempfile.mkdtemp(
-        prefix="kmv_stream_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    # scope shuffle partitions to the stream (same rationale as
-    # run_available_now: per-batch sketch aggs are tiny; 32 partitions
-    # just multiply task overhead per micro-batch)
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    # shuffle partitions scoped to the stream: per-batch sketch aggs are
+    # tiny, and 32 partitions just multiply task overhead per micro-batch
+    with scratch_dir("kmv_stream_") as base, scoped_conf(
+        spark, _SHUFFLE, _STATE_PARTITIONS
+    ):
         src = os.path.join(base, "src")
         static.repartition(n_splits).write.parquet(src)
         stream = (
@@ -680,8 +633,8 @@ def stream_events_kmv(
         publish = foreach_batch_publisher(root)
 
         def _sketch_batch(bdf: DataFrame, batch_id: int) -> None:
-            # one-shuffle KMV per batch (r10 floor audit): collect_set
-            # dedups, array_sort+slice keeps the k smallest — replacing
+            # one-shuffle KMV per batch: collect_set dedups,
+            # array_sort+slice keeps the k smallest — replacing
             # the former distinct + window-topk (2 shuffles + sort) with
             # a single ObjectHashAggregate whose partial state is the
             # batch slice's distinct hashes (bounded by micro-batch size)
@@ -750,18 +703,12 @@ def stream_events_kmv(
         )
         # the published root is ephemeral: materialize before cleanup
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 def stream_docs_drift(
     spark: SparkSession, sf_dir: str, n_splits: int = 4, top_k: int = 20
 ) -> DataFrame:
-    """Continuous distribution-drift maintenance (r8): each micro-batch
+    """Continuous distribution-drift maintenance: each micro-batch
     folds its slice of the document stream into per-token conditional
     (cnt_a, cnt_b) partial counts and append-publishes THOSE through the
     exactly-once commit sink; the reader sums the published partials per
@@ -775,9 +722,6 @@ def stream_docs_drift(
     the oracle: the streamed report must equal q98's whole-table static
     report bit-for-bit; ``multi_batch`` pins that ≥2 real commits
     happened."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from xml_to_parquet_spark.functions.drift import (
         drift_report_from_counts,
     )
@@ -793,13 +737,9 @@ def stream_docs_drift(
         .select("source", "text")
         .filter(F.col("source").isin(["src0", "src1"]))
     )
-    base = _tempfile.mkdtemp(
-        prefix="drift_stream_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with scratch_dir("drift_stream_") as base, scoped_conf(
+        spark, _SHUFFLE, _STATE_PARTITIONS
+    ):
         src = os.path.join(base, "src")
         static.repartition(n_splits).write.parquet(src)
         stream = (
@@ -844,12 +784,6 @@ def stream_docs_drift(
         )
         # the published root is ephemeral: materialize before cleanup
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 def stream_xml_dir(
@@ -866,7 +800,9 @@ def stream_xml_dir(
 
     Schema is inferred from a one-off batch read of the current directory
     contents (file-source streams require an explicit schema). Returns a
-    batch view of the sink after the run.
+    batch view of the sink after the run. A ``checkpoint_dir`` passed in
+    is left in place for the next run; without one, the run uses a
+    scratch checkpoint that is removed on return.
     """
     from xml_to_parquet_spark.sources.xml_source import (
         add_lineage,
@@ -894,14 +830,17 @@ def stream_xml_dir(
             flatten_records(stream, max_repeat=1, doc_order=doc_order)
         )
     )
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_xml_")
-    q = (
-        out.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with (
+        nullcontext(checkpoint_dir) if checkpoint_dir
+        else scratch_dir("ckpt_xml_")
+    ) as ckpt:
+        q = (
+            out.writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", output_dir)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return spark.read.parquet(output_dir)

@@ -41,6 +41,7 @@ from xml_to_parquet_spark.operators.relational import (
     union_by_name,
 )
 from xml_to_parquet_spark.operators.window import surrogate_keys
+from xml_to_parquet_spark.session import process_scratch_dir, scratch_dir
 
 
 @dataclass(frozen=True)
@@ -1683,8 +1684,8 @@ _TYPED_XML = """<?xml version="1.0" encoding="UTF-8"?>
 
 
 def q_xsd_typed_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """XSD-declared types flow through to the star output (r12, VERDICT
-    r11 item 5 / SURVEY.md:82's named parity-plus): the reference uses
+    """XSD-declared types flow through to the star output (SURVEY.md:82's
+    named parity-plus): the reference uses
     its XSD for validation ONLY (schema_validator.R:19-39) and every
     extracted column stays character; here apply_xsd_types try_casts
     the extracted string columns to the DECLARED types — price/rating
@@ -1694,15 +1695,13 @@ def q_xsd_typed_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     measures instead of widening them back to double. The oracle casts
     the SAME literals from the same XSD mapping on the DuckDB side, so
     the driver's schema check asserts the typed output schema."""
-    import tempfile
-
     from xml_to_parquet_spark.plans.star_transformer import build_star_schema
     from xml_to_parquet_spark.sources.xml_source import (
         apply_xsd_types,
         read_xml_records,
     )
 
-    d = tempfile.mkdtemp(prefix="xml_typed_")
+    d = process_scratch_dir("xml_typed_")
     with open(os.path.join(d, "products.xml"), "w") as fh:
         fh.write(_TYPED_XML)
     xsd_path = os.path.join(d, "products.xsd")
@@ -1764,12 +1763,10 @@ ORDER BY record_id
 
 
 def q_xml_star_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from xml_to_parquet_spark.plans.star_transformer import build_star_schema
     from xml_to_parquet_spark.sources.xml_source import read_xml_records
 
-    d = tempfile.mkdtemp(prefix="xml_golden_")
+    d = process_scratch_dir("xml_golden_")
     with open(os.path.join(d, "products.xml"), "w") as fh:
         fh.write(_GOLDEN_XML)
     records = read_xml_records(spark, os.path.join(d, "*.xml"), lineage=False)
@@ -1833,15 +1830,13 @@ def q_business_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6: first-XML-comment business keys attached per file (reference
     xml_parser.R:227-261, main.R:229-237) — whole-file pass + broadcast
     join, each key name also pivoted to its own column."""
-    import tempfile
-
     from xml_to_parquet_spark.sources.xml_source import (
         attach_business_keys,
         extract_business_keys,
         read_xml_records,
     )
 
-    d = tempfile.mkdtemp(prefix="xml_bk_")
+    d = process_scratch_dir("xml_bk_")
     for fname, body in (("a.xml", _BK_XML_A), ("b.xml", _BK_XML_B)):
         with open(os.path.join(d, fname), "w") as fh:
             fh.write(body)
@@ -1922,7 +1917,6 @@ def q_validation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     internal DTD valid (dtd_good.xml), internal DTD invalid but
     well-formed (dtd_bad.xml — only DTD validation can reject it)."""
     import glob as _glob
-    import tempfile
 
     from xml_to_parquet_spark.sources.xml_source import read_xml_records
     from xml_to_parquet_spark.validation.xml_validation import (
@@ -1930,7 +1924,7 @@ def q_validation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         validate_files,
     )
 
-    d = tempfile.mkdtemp(prefix="xml_gate_")
+    d = process_scratch_dir("xml_gate_")
     files = (
         ("good.xml", _VAL_GOOD_XML),
         ("bad.xml", _VAL_BAD_XML),
@@ -1960,12 +1954,10 @@ def q_default_count_measure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: a star built from a catalog with NO measure columns gets the
     default ``record_count = 1`` measure (reference
     star_transformer.R:82-86)."""
-    import tempfile
-
     from xml_to_parquet_spark.plans.star_transformer import build_star_schema
     from xml_to_parquet_spark.sources.xml_source import read_xml_records
 
-    d = tempfile.mkdtemp(prefix="xml_a6_")
+    d = process_scratch_dir("xml_a6_")
     with open(os.path.join(d, "products.xml"), "w") as fh:
         fh.write(_GOLDEN_XML)
     records = read_xml_records(spark, os.path.join(d, "*.xml"), lineage=False)
@@ -2011,11 +2003,9 @@ def q_generated_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global sort). The ids themselves are partitioning-dependent, so the
     oracle checks the invariants: one non-null UNIQUE id per row, across
     files."""
-    import tempfile
-
     from xml_to_parquet_spark.sources.xml_source import read_xml_records
 
-    d = tempfile.mkdtemp(prefix="xml_f13_")
+    d = process_scratch_dir("xml_f13_")
     for fname, body in (("a.xml", _NOID_XML_A), ("b.xml", _NOID_XML_B)):
         with open(os.path.join(d, fname), "w") as fh:
             fh.write(body)
@@ -2045,11 +2035,9 @@ def q_make_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F14: repeated sibling tags flatten to ``name, name.1, ...`` columns
     (R make.unique parity, reference xml_parser.R:193-199); records with
     fewer occurrences get nulls."""
-    import tempfile
-
     from xml_to_parquet_spark.sources.xml_source import read_xml_records
 
-    d = tempfile.mkdtemp(prefix="xml_f14_")
+    d = process_scratch_dir("xml_f14_")
     with open(os.path.join(d, "lib.xml"), "w") as fh:
         fh.write(_REPEAT_XML)
     records = read_xml_records(
@@ -2073,12 +2061,11 @@ def q_report_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F15/A5: processing-report rate math from Spark-side counts
     (reference logger.R:94-130) — 3 valid files + 1 malformed → 0.75."""
     import glob as _glob
-    import tempfile
 
     from xml_to_parquet_spark.logging_utils import validation_summary
     from xml_to_parquet_spark.validation.xml_validation import validate_files
 
-    d = tempfile.mkdtemp(prefix="xml_f15_")
+    d = process_scratch_dir("xml_f15_")
     for i in range(3):
         with open(os.path.join(d, f"good{i}.xml"), "w") as fh:
             fh.write(_VAL_GOOD_XML)
@@ -5028,19 +5015,15 @@ def _registrable_sql(host_expr: str = "host") -> str:
 
 
 def q_atomic_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Atomic manifest-pointer table publish (a47, sinks/publish.py —
-    VERDICT r6 #1): commit snapshot v1, supersede it with v2, then KILL a
-    v3 writer mid-materialization (a raise_error column) — the reader
+    """Atomic manifest-pointer table publish (a47, sinks/publish.py):
+    commit snapshot v1, supersede it with v2, then KILL a v3 writer
+    mid-materialization (a raise_error column) — the reader
     resolving the pointer must see exactly v2, never the orphaned partial
     files. The oracle recomputes v2's content straight from lineitem, so
     a pointer that advanced on the failed commit (or stayed on v1, or a
     reader that globbed version dirs instead of resolving the manifest)
     hash-mismatches. Closes the reference's unguarded in-place overwrite
     (parquet_writer.R:53-81)."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-
     from xml_to_parquet_spark.sinks.publish import (
         publish_parquet,
         read_published,
@@ -5053,11 +5036,7 @@ def q_atomic_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_orderkey") % 10 == 0)
         .select("l_orderkey", "l_returnflag", "l_quantity")
     )
-    root = tempfile.mkdtemp(
-        prefix="a47_pub_",
-        dir="/dev/shm" if _os.path.isdir("/dev/shm") else None,
-    )
-    try:
+    with scratch_dir("a47_pub_") as root:
         publish_parquet(li.filter(F.col("l_quantity") >= 30), root)
         publish_parquet(li.filter(F.col("l_quantity") >= 40), root)  # v2
         poisoned = li.withColumn(
@@ -5091,8 +5070,6 @@ def q_atomic_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the published root is ephemeral: materialize before cleanup
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        _shutil.rmtree(root, ignore_errors=True)
 
 
 _Q_ATOMIC_PUBLISH_SQL = """
@@ -5108,7 +5085,7 @@ ORDER BY l_returnflag
 
 def q_diff_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Version-to-version change feed (q94, publish.diff_published —
-    the Delta-CDF-shaped incremental-consumer surface, r8): publish
+    the Delta-CDF-shaped incremental-consumer surface): publish
     v1 = qty>=30 slice, v2 = APPEND of the qty<15 slice, v3 = OVERWRITE
     with the qty>=40 slice, then emit diff(v1→v2) (the append fast path:
     reads ONLY the new version dir, O(delta)) and diff(v2→v3) (the
@@ -5116,10 +5093,6 @@ def q_diff_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes both diffs from lineitem set algebra — a fast path that
     leaked base rows, a pointer misread, or multiset-wrong exceptAll all
     hash-mismatch."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-
     from xml_to_parquet_spark.sinks.publish import (
         diff_published,
         publish_parquet,
@@ -5130,11 +5103,7 @@ def q_diff_published(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_orderkey") % 10 == 0)
         .select("l_orderkey", "l_linenumber", "l_quantity")
     )
-    root = tempfile.mkdtemp(
-        prefix="q94_diff_",
-        dir="/dev/shm" if _os.path.isdir("/dev/shm") else None,
-    )
-    try:
+    with scratch_dir("q94_diff_") as root:
         publish_parquet(li.filter(F.col("l_quantity") >= 30), root)
         publish_parquet(
             li.filter(F.col("l_quantity") < 15), root, mode="append"
@@ -5155,8 +5124,6 @@ def q_diff_published(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the published root is ephemeral: materialize before cleanup
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        _shutil.rmtree(root, ignore_errors=True)
 
 
 _Q_DIFF_PUBLISHED_SQL = """
@@ -5866,17 +5833,13 @@ def _q_stream_drift_sql() -> str:
 
 def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental materialized-view maintenance (q108,
-    scale.refresh_grouped_agg, r8): publish a lineitem slice, append a
+    scale.refresh_grouped_agg): publish a lineitem slice, append a
     second slice, then refresh the per-returnflag (count, sum) state
     from the CHANGE FEED only — the q94 append fast path reads just the
     new data dirs, so the refresh is O(delta) with zero base rescans.
     The oracle recomputes the aggregate over the FULL union in DuckDB:
     a match proves the textbook self-maintainable count/sum algebra
     (exact DECIMAL sums — associative, so incremental == full)."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-
     from xml_to_parquet_spark.operators.scale import (
         materialize_grouped_agg,
         refresh_grouped_agg,
@@ -5893,11 +5856,7 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     part_a = li.filter((F.col("l_orderkey") / 10).cast("long") % 3 != 0)
     part_b = li.filter((F.col("l_orderkey") / 10).cast("long") % 3 == 0)
-    root = tempfile.mkdtemp(
-        prefix="q108_mv_",
-        dir="/dev/shm" if _os.path.isdir("/dev/shm") else None,
-    )
-    try:
+    with scratch_dir("q108_mv_") as root:
         publish_parquet(part_a, root)                    # v1 snapshot
         publish_parquet(part_b, root, mode="append")     # v2 append
         prev = materialize_grouped_agg(
@@ -5915,8 +5874,6 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).orderBy("l_returnflag")
         # the published root is ephemeral: materialize before cleanup
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        _shutil.rmtree(root, ignore_errors=True)
 
 
 _Q_INCREMENTAL_AGG_SQL = """
