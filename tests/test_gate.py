@@ -1,5 +1,8 @@
 """Gate-tooling unit tests (no Spark session needed).
 
+Every key the tools name must be a live catalog key, and COVERAGE.md's
+appendix must list every key.
+
 Pins the ADVICE-r12 fix to tools/gate.py's benign-error allowlist: only
 the documented accumulator stop race — the DAGScheduler "Failed to
 update accumulator" ERROR line WITH "non-existent accumulator" in the
@@ -11,9 +14,8 @@ must stay red.
 import os
 import sys
 
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from gate import classify_error_lines  # noqa: E402
 
@@ -71,8 +73,7 @@ def test_pandas_kernel_classification_pinned():
     """VERDICT r12 item 2: bench_diff carries the list of Arrow-batched
     pandas-kernel slugs whose compute the self+JVM CPU signal cannot
     see. Pin the membership (the ten documented kernels) and that each
-    slug resolves to a live catalog entry regardless of window
-    rotation."""
+    slug resolves to a live catalog entry."""
     from bench_diff import PANDAS_KERNEL_SLUGS
 
     from xml_to_parquet_spark.workload import KEY_BY_SLUG
@@ -88,8 +89,7 @@ def test_pandas_kernel_classification_pinned():
 
 def test_multi_job_noise_band_slugs_resolve():
     """VERDICT r12 item 5: the documented CPU-noise floor rides on
-    bench_diff; its slugs must track the live catalog across window
-    rotations."""
+    bench_diff; its slugs must resolve to live catalog entries."""
     from bench_diff import MULTI_JOB_CPU_NOISE
 
     from xml_to_parquet_spark.workload import KEY_BY_SLUG
@@ -139,12 +139,10 @@ def test_bench_stamps_cpu_metric_variant():
     # the sidecar writer and the committed canonical sidecar both carry
     # the variant stamp bench_diff keys on
     import json
-    import os
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    src = open(os.path.join(repo, "bench.py")).read()
+    src = open(os.path.join(REPO, "bench.py")).read()
     assert '"cpu_metric": "self+jvm"' in src
-    side = json.load(open(os.path.join(repo, "BENCH_LOCAL_FULL.json")))
+    side = json.load(open(os.path.join(REPO, "BENCH_LOCAL_FULL.json")))
     assert side.get("cpu_metric") == "self+jvm"
 
 
@@ -160,3 +158,38 @@ def test_cause_must_be_near_the_error_line():
     errs, benign = classify_error_lines(txt)
     assert benign == []
     assert len(errs) == 1
+
+
+def test_tool_keys_are_catalog_keys():
+    import explain_audit as ea
+
+    import bench
+    from xml_to_parquet_spark.workload import QUERIES
+
+    named = {
+        "bench.HEADLINE": bench.HEADLINE,
+        "explain_audit.BROADCAST_ONLY": ea.BROADCAST_ONLY,
+        "explain_audit.PUSHDOWN": ea.PUSHDOWN,
+        "explain_audit.PRUNING": ea.PRUNING,
+        "explain_audit.REQUIRED_NODES": ea.REQUIRED_NODES,
+        "explain_audit.FORBIDDEN_NODES": ea.FORBIDDEN_NODES,
+        "explain_audit.SKIP": ea.SKIP,
+    }
+    stale = {
+        where: sorted(set(keys) - set(QUERIES))
+        for where, keys in named.items()
+        if set(keys) - set(QUERIES)
+    }
+    assert not stale, f"keys not in the catalog: {stale}"
+
+
+def test_coverage_appendix_current():
+    """COVERAGE.md's slug appendix has a ``| slug | key |`` row for
+    every catalog key."""
+    from xml_to_parquet_spark.workload import QUERIES
+
+    cov = open(os.path.join(REPO, "COVERAGE.md")).read()
+    missing = [
+        k for k in QUERIES if f"| {k.split('_', 1)[1]} | {k} |" not in cov
+    ]
+    assert not missing, f"no appendix row for {missing}"

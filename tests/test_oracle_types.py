@@ -14,9 +14,9 @@ is caught at pytest time instead of one driver round later.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
+from tools.verify_local import oracle_connection
 from xml_to_parquet_spark.workload import QUERIES
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -25,16 +25,7 @@ FRAGILE = ("HUGEINT", "UHUGEINT")
 
 @pytest.fixture(scope="module")
 def con():
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return con
+    return oracle_connection(SF_DIR)
 
 
 def test_no_fragile_oracle_output_types(con):
@@ -66,8 +57,9 @@ def test_integer_columns_survive_pandas_path(con):
     for name, spec in QUERIES.items():
         if spec.oracle is None:
             continue
-        cols = [d[0] for d in con.execute(spec.oracle).description]
-        rows = con.execute(spec.oracle).fetchall()
+        cur = con.execute(spec.oracle)
+        cols = [d[0] for d in cur.description]
+        rows = cur.fetchall()
         pdf = con.execute(spec.oracle).df()
         for i, c in enumerate(cols):
             vals = [r[i] for r in rows]

@@ -336,9 +336,12 @@ def test_score_documents_custom_id_col(spark):
 
 def test_soak_rungs_well_formed():
     """Every soak rung must unpack as (dst, replicas, tables, queries)
-    (ADVICE r3 flagged a malformed entry class)."""
+    (ADVICE r3 flagged a malformed entry class) and name only live
+    catalog keys."""
     import importlib.util
     import os
+
+    from xml_to_parquet_spark.workload import QUERIES
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
@@ -351,6 +354,8 @@ def test_soak_rungs_well_formed():
         dst, replicas, tables, queries = entry
         assert isinstance(dst, str) and isinstance(replicas, int)
         assert isinstance(tables, list) and isinstance(queries, list)
+        stale = [q for q in queries if q not in QUERIES]
+        assert not stale, f"rung {rung} names unknown keys {stale}"
 
 
 def test_decode_image_real_netpbm_through_spark(spark):
@@ -534,58 +539,19 @@ def test_fake_resize_matches_oracle_arithmetic():
 
 def test_bench_line_fits_driver_window():
     """The driver records only the last 2000 bytes of bench stdout; r2/r3
-    lost their bench data to an oversized JSON line.  Worst-case-render the
-    headline line (every timing 9999.999) and assert headroom."""
-    import json as _json
+    lost their bench data to an oversized JSON line.  Render the line
+    with every number at its widest and assert headroom."""
+    import os
+    import sys
 
-    import bench as benchmod  # noqa: F401  (import proves module loads)
-    from xml_to_parquet_spark.workload import KEY_BY_SLUG, QUERIES
+    import bench
 
-    src = open(benchmod.__file__).read()
-    assert "BENCH_LOCAL_FULL.json" in src
-    # replicate the headline construction against the live catalog —
-    # resolved by SLUG, exactly as bench.py and gate.check_bench_line
-    # do (the window rotation renames key prefixes every round)
-    import re
+    tools = os.path.join(os.path.dirname(bench.__file__), "tools")
+    sys.path.insert(0, tools)
+    from gate import worst_case_bench_line
 
-    keys = re.findall(r'"((?:q|a)\d{2,3}_[a-z_0-9]+)"', src)
-    missing = [k for k in keys if k.split("_", 1)[1] not in KEY_BY_SLUG]
-    assert not missing, f"bench headline slugs not in catalog: {missing}"
-    headline = [KEY_BY_SLUG[k.split("_", 1)[1]] for k in keys]
-    assert len(headline) >= 30, "headline subset shrank unexpectedly"
-    line = _json.dumps(
-        {
-            "metric": "workload_total_wall",
-            "value": 99999.999,
-            "unit": "sec",
-            "queries": {k: 9999.999 for k in headline},
-            "cpu_total": 99999.999,  # r12 load-insensitive twin total
-            "sf": 0.1,
-            "n_queries": len(QUERIES),
-            "per_query_mean": 9999.999,
-            "per_query_median": 9999.999,
-            "xml_etl": {
-                "files": 10000,
-                "mb": 99999.9,
-                "sec": 99999.99,
-                "mb_per_s": 9999.99,
-                "cores": 128,
-                "ref_8core_mb_per_s": 4.2,
-                "speedup": 999.99,
-            },
-            # r10 era marker rides on the printed line too (r11: plus
-            # the mature-JVM mid-sweep bracket)
-            "era": {
-                "cal_ms_start": 99999.9,
-                "load1_start": 99.99,
-                "cal_ms_mid": 99999.9,
-                "load1_mid": 99.99,
-                "cal_ms_end": 99999.9,
-                "load1_end": 99.99,
-            },
-        },
-        separators=(",", ":"),
-    )
+    line = worst_case_bench_line()
+    assert len(bench.HEADLINE) >= 30, "headline subset shrank unexpectedly"
     assert len(line) < 1900, len(line)
 
 

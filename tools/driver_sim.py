@@ -18,10 +18,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 os.chdir("/")  # ensure nothing depends on cwd being the repo
 
-import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
-from tools.verify_local import fingerprint  # noqa: E402
+from tools.verify_local import fingerprint, oracle_connection  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -48,14 +47,7 @@ def main() -> int:
     print(f"smoke OK: {len(rows)} rows")
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = oracle_connection(SF_DIR)
 
     failures = []
     for name, fn in qs.items():

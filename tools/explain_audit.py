@@ -23,147 +23,119 @@ SF_DIR = "/root/testdata/sf0.01"
 # queries where a SortMergeJoin would mean a broken broadcast decision
 BROADCAST_ONLY = {
     "q01_star_revenue",
-    "q09_star_dim_keys",
-    "q15_star_build",
-    "q26_knn_brute",
-    "q32_semi_join",
-    "q33_anti_join",
+    "q199_star_dim_keys",
+    "q267_star_build",
+    "q213_knn_brute",
+    "q219_semi_join",
+    "a247_anti_join",
 }
 # queries whose filters must reach the parquet scan
 PUSHDOWN = {
     "q01_star_revenue": "l_shipdate",
-    "q04_project_filter": "o_orderstatus",
-    "q32_semi_join": "o_orderstatus",
+    "q194_project_filter": "o_orderstatus",
+    "q219_semi_join": "o_orderstatus",
 }
 # query → (table scanned, max columns allowed in ReadSchema)
 PRUNING = {
-    "q04_project_filter": ("orders", 5),
+    "q194_project_filter": ("orders", 5),
     "q01_star_revenue": ("lineitem", 4),
-    "q06_sort_limit": ("orders", 2),
-    "q57_hash_sample": ("documents", 4),
-    "q65_grouped_topk": ("documents", 3),
-    "q93_repetition_features": ("documents", 2),
-    "q116_dedup_incremental": ("documents", 2),
-    "q86_assign_split": ("documents", 1),
+    "q196_sort_limit": ("orders", 2),
+    "q272_hash_sample": ("documents", 4),
+    "q276_grouped_topk": ("documents", 3),
+    "q293_repetition_features": ("documents", 2),
+    "q256_dedup_incremental": ("documents", 2),
+    "q286_assign_split": ("documents", 1),
     # URL ops build from (doc_id, source) only — the wide text column
     # must never reach the scan
-    "q124_url_normalize": ("documents", 2),
-    "q125_domain_cap": ("documents", 2),
+    "q264_url_normalize": ("documents", 2),
+    "q265_domain_cap": ("documents", 2),
     # r9: chunking reads exactly (doc_id, text); the WAV entry builds
     # payloads from ids alone, so the text column must be pruned; the
     # JL projection reads exactly (vec_id, embedding)
-    "q129_chunk_documents": ("documents", 2),
-    "q130_wav_features": ("documents", 1),
-    "q131_jl_project": ("embeddings", 2),
-    "q132_winnow_fingerprints": ("documents", 2),
-    "q133_skipgram_cooc": ("documents", 1),
-    "q134_phrase_query": ("documents", 2),
+    "q333_chunk_documents": ("documents", 2),
+    "a228_wav_features": ("documents", 1),
+    "a266_jl_project": ("embeddings", 2),
+    "a229_winnow_fingerprints": ("documents", 2),
+    "a230_skipgram_cooc": ("documents", 1),
+    "a231_phrase_query": ("documents", 2),
 }
 # query → physical node that MUST appear (scale-critical plan property)
 REQUIRED_NODES = {
-    "q65_grouped_topk": "WindowGroupLimit",  # pre-shuffle per-group top-k
-    "q125_domain_cap": "WindowGroupLimit",  # cap ≤ k rows/domain/map task
-    "q83_tfidf_terms": "WindowGroupLimit",
-    "q82_contamination": "BroadcastHashJoin",  # eval shingles broadcast
+    "q276_grouped_topk": "WindowGroupLimit",  # pre-shuffle per-group top-k
+    "q265_domain_cap": "WindowGroupLimit",  # cap ≤ k rows/domain/map task
+    "q283_tfidf_terms": "WindowGroupLimit",
+    "q282_contamination": "BroadcastHashJoin",  # eval shingles broadcast
     # tiled all-pairs gemm runs as grouped pandas — NOT a driver collect
-    "q25_dedup_embedding": "FlatMapGroupsInPandas",
+    "a246_dedup_embedding": "FlatMapGroupsInPandas",
     # r6: ADC candidates come from a broadcast equi-join on cell id
-    "a44_ivf_pq_adc": "BroadcastHashJoin",
+    "q347_ivf_pq_adc": "BroadcastHashJoin",
     # r10: no-split packing runs shard-grouped in Arrow workers — never a
     # driver-side loop
-    "a46_pack_nosplit": "FlatMapGroupsInPandas",
+    "a253_pack_nosplit": "FlatMapGroupsInPandas",
 }
 # query → physical node that must NOT appear
 FORBIDDEN_NODES = {
     # a CollectLimit/driver materialization in the neardup path would mean
     # the corpus flows through the driver again (VERDICT r1 finding #2)
-    "q25_dedup_embedding": "CollectLimit",
+    "a246_dedup_embedding": "CollectLimit",
     # blocked pair searches must never plan an all-pairs cross product
-    "q90_fuzzy_pairs": "CartesianProduct",
-    "q92_fuzzy_qgram": "CartesianProduct",
-    "q139_simhash_blocked": "CartesianProduct",
+    "q290_fuzzy_pairs": "CartesianProduct",
+    "q292_fuzzy_qgram": "CartesianProduct",
+    "q346_simhash_blocked": "CartesianProduct",
     # r6: repeated-k-gram spans must join postings↔repeated-hash set on
     # the gram hash, never cross-product; ADC must never go all-pairs
-    "a42_substring_dedup": "CartesianProduct",
-    "a44_ivf_pq_adc": "CartesianProduct",
+    "q324_substring_dedup": "CartesianProduct",
+    "q347_ivf_pq_adc": "CartesianProduct",
     # r7: semantic dedup's in-cell pairing must be an equi-join on cell
-    "a49_semantic_dedup": "CartesianProduct",
+    "q345_semantic_dedup": "CartesianProduct",
     # r7: rare-gram postings⋈freq is an equi-join on the gram; the only
     # cross join is the broadcast 1-row total (BroadcastNestedLoopJoin)
-    "a50_rare_gram_lm": "CartesianProduct",
+    "q327_rare_gram_lm": "CartesianProduct",
     # r9: k-core peels restrict edges through keep-set equi-joins —
     # never a cross product — and the multi-probe semantic-dedup
     # candidate join stays an equi-join on the probed cell
-    "q126_k_core": "CartesianProduct",
+    "a264_k_core": "CartesianProduct",
     # r9: phrase/proximity postings intersect through equi-joins only
-    "q134_phrase_query": "CartesianProduct",
-    "q136_near_query": "CartesianProduct",
-    "q137_more_like_this": "CartesianProduct",
+    "a231_phrase_query": "CartesianProduct",
+    "a255_near_query": "CartesianProduct",
+    "a256_more_like_this": "CartesianProduct",
     # r9: JL-ANN stage 1 is a BROADCAST nested loop (|Q| rows), stage 2
     # an id equi-join — an unbroadcast cross product would mean the
     # corpus self-joined
-    "q135_jl_ann": "CartesianProduct",
+    "a267_jl_ann": "CartesianProduct",
     # r10: image/audio perceptual-hash pair searches reuse the pigeonhole
     # chunk equi-join — all-pairs would defeat the blocking
-    "a75_image_phash_dedup": "CartesianProduct",
-    "a60_audio_fp_dedup": "CartesianProduct",
+    "a269_image_phash_dedup": "CartesianProduct",
+    "q337_audio_fp_dedup": "CartesianProduct",
     # r12: the containment candidate join is an equi-join on the
     # contained side's prefix shingles (container side = full postings);
     # a cross product would mean the one-sided prefix filter collapsed
-    "a148_containment_pairs": "CartesianProduct",
+    "q294_containment_pairs": "CartesianProduct",
     # r12: the sketch screen is bottom-k rows equi-joined on the hash
-    "a154_containment_sketch": "CartesianProduct",
+    "q300_containment_sketch": "CartesianProduct",
     # r13: the screen->exact composition inherits both stages' shapes —
     # survivors semi-join the contained side, then the prefix equi-join
-    "a204_containment_screened": "CartesianProduct",
+    "q351_containment_screened": "CartesianProduct",
     # r13: hot/cold split — both branches stay equi-joins (broadcast
     # hash on the hot side), so the ban holds for the skewed fixture
-    "a205_containment_skew": "CartesianProduct",
+    "q352_containment_skew": "CartesianProduct",
     # r13: the constraint suite's ref check joins broadcast dim key
     # sets — a sort-merge join would mean the fact table shuffled for
     # a report that must stay one-scan
-    "a212_constraint_suite": "SortMergeJoin",
+    "q359_constraint_suite": "SortMergeJoin",
     # r13: zonemap/fd cross joins are 1-row scalar broadcasts
     # (BroadcastNestedLoopJoin); a CartesianProduct would mean a
     # non-singleton side slipped in
-    "a213_zonemap_pruning": "CartesianProduct",
-    "a214_fd_profile": "CartesianProduct",
+    "q360_zonemap_pruning": "CartesianProduct",
+    "q361_fd_profile": "CartesianProduct",
 }
-
-
-def _slug(key: str) -> str:
-    return key.split("_", 1)[1]
-
-
-def _rekey(rules: dict, catalog: dict) -> dict:
-    """Resolve rule keys by SLUG against the current catalog (r10): the
-    50-slot window rotation renames entries every round (a## ↔ q##, slug
-    preserved), and name-keyed rules silently went dangling after the r9
-    rotation (q126_k_core etc. no longer existed). Slug identity is the
-    same convention rotation_report uses. A rule whose slug matches NO
-    catalog entry is a hard error — rules must never rot silently."""
-    by_slug = {_slug(k): k for k in catalog}
-    out = {}
-    for key, val in rules.items():
-        cur = by_slug.get(_slug(key))
-        if cur is None:
-            raise SystemExit(
-                f"explain_audit: rule for {key!r} matches no catalog slug"
-            )
-        out[cur] = val
-    return out
+# streaming/pandas plans don't expose these nodes
+SKIP = {"q269_streaming_window", "q268_multimodal_decode"}
 
 
 def main() -> int:
     from xml_to_parquet_spark.session import get_spark
     from xml_to_parquet_spark.workload import QUERIES
-
-    global BROADCAST_ONLY, PUSHDOWN, PRUNING, REQUIRED_NODES, FORBIDDEN_NODES
-    BROADCAST_ONLY = set(_rekey(dict.fromkeys(BROADCAST_ONLY), QUERIES))
-    PUSHDOWN = _rekey(PUSHDOWN, QUERIES)
-    PRUNING = _rekey(PRUNING, QUERIES)
-    REQUIRED_NODES = _rekey(REQUIRED_NODES, QUERIES)
-    FORBIDDEN_NODES = _rekey(FORBIDDEN_NODES, QUERIES)
 
     spark = get_spark("explain_audit")
     from xml_to_parquet_spark.session import set_log_level
@@ -171,10 +143,9 @@ def main() -> int:
     set_log_level(spark, "ERROR")
     hard_fail = []
 
-    skip_slugs = {"streaming_window", "multimodal_decode"}
     for name, spec in QUERIES.items():
-        if _slug(name) in skip_slugs:
-            continue  # streaming/pandas plans don't expose these nodes
+        if name in SKIP:
+            continue
         try:
             df = spec.fn(spark, SF_DIR)
             plan = df._jdf.queryExecution().executedPlan().toString()

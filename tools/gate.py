@@ -25,7 +25,6 @@ reproduce under ``python tools/gate.py`` must not be made.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import subprocess
@@ -112,87 +111,37 @@ def _run(
     return status, dt, tail
 
 
-def check_bench_line() -> tuple[str, float, str]:
-    """Worst-case-render the bench headline JSON line (every timing
-    9999.999) and assert it fits the driver's 2000-byte stdout window
-    with headroom (memory: <1900 bytes)."""
-    t0 = time.time()
+def worst_case_bench_line() -> str:
+    """bench.py's printed line with every number at its widest: every
+    catalog entry timed at 9999.999 s."""
+    import bench
     from xml_to_parquet_spark.workload import QUERIES
 
-    from xml_to_parquet_spark.workload import KEY_BY_SLUG
-
-    src = open(os.path.join(REPO, "bench.py")).read()
-    raw = re.findall(r'"((?:q|a)\d{2,3}_[a-z_0-9]+)"', src)
-    # bench resolves its headline entries by SLUG (window rotation
-    # renames key prefixes every round) — mirror that here so the
-    # worst-case line is computed over the keys bench will PRINT
-    missing = [k for k in raw if k.split("_", 1)[1] not in KEY_BY_SLUG]
-    keys = [
-        KEY_BY_SLUG[k.split("_", 1)[1]] for k in raw if k not in missing
-    ]
-    line = json.dumps(
-        {
-            "metric": "workload_total_wall",
-            "value": 99999.999,
-            "unit": "sec",
-            "queries": {k: 9999.999 for k in keys},
-            "cpu_total": 99999.999,  # r12 load-insensitive twin total
-            "sf": 0.1,
-            "n_queries": len(QUERIES),
-            "per_query_mean": 9999.999,
-            "per_query_median": 9999.999,
-            "xml_etl": {
-                "files": 10000,
-                "mb": 99999.9,
-                "sec": 99999.99,
-                "mb_per_s": 9999.99,
-                "cores": 128,
-                "ref_8core_mb_per_s": 4.2,
-                "speedup": 999.99,
-            },
-            # r10 era marker rides on the printed line too
-            "era": {
-                "cal_ms_start": 99999.9,
-                "load1_start": 99.99,
-                "cal_ms_mid": 99999.9,
-                "load1_mid": 99.99,
-                "cal_ms_end": 99999.9,
-                "load1_end": 99.99,
-            },
-        },
-        separators=(",", ":"),
-    )
-    ok = not missing and len(line) < 1900
-    detail = f"headline={len(keys)} keys, worst-case line={len(line)}B"
-    if missing:
-        detail += f", MISSING from QUERIES: {missing}"
-    status = "PASS" if ok else "FAIL"
-    print(f"[gate] bench-line: {status} in {time.time()-t0:.1f}s ({detail})")
-    return status, time.time() - t0, detail
+    timings = dict.fromkeys(QUERIES, 9999.999)
+    etl = {
+        "files": 10000,
+        "mb": 99999.9,
+        "sec": 99999.99,
+        "mb_per_s": 9999.99,
+        "cores": 128,
+        "ref_8core_mb_per_s": 4.2,
+        "speedup": 999.99,
+    }
+    era = {}
+    for point in ("start", "mid", "end"):
+        era[f"cal_ms_{point}"] = 99999.9
+        era[f"load1_{point}"] = 99.99
+    return bench.headline_line(timings, timings, 0.1, etl, era)
 
 
-def check_rotation_staleness() -> tuple[str, float, str]:
-    """VERDICT r10 item 3: with 158 catalog entries and a 50-slot driver
-    window, rotation debt could accumulate silently. Fails when the live
-    window deviates from the stalest-first policy or when an entry that
-    went green under the policy is >4 rounds stale (rotation stalled);
-    pre-policy debt still draining is a warning."""
+def check_bench_line() -> tuple[str, float, str]:
+    """Assert the worst-case bench line fits the driver's 2000-byte
+    stdout window with headroom (<1900 bytes)."""
     t0 = time.time()
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    import rotation_report as rr
-
-    rows = rr.build_rows()
-    failures, warnings = rr.staleness_alarm(rows)
-    status = "PASS" if not failures else "FAIL"
-    detail = f"{len(failures)} failures, {len(warnings)} pre-policy warnings"
-    print(f"[gate] rotation-staleness: {status} in "
-          f"{time.time()-t0:.1f}s ({detail})")
-    for f_ in failures:
-        print(f"        FAIL {f_}")
-    for w in warnings[:8]:
-        print(f"        warn {w}")
-    if len(warnings) > 8:
-        print(f"        warn ... {len(warnings) - 8} more")
+    line = worst_case_bench_line()
+    status = "PASS" if len(line) < 1900 else "FAIL"
+    detail = f"worst-case line={len(line)}B"
+    print(f"[gate] bench-line: {status} in {time.time()-t0:.1f}s ({detail})")
     return status, time.time() - t0, detail
 
 
@@ -201,7 +150,6 @@ def main() -> int:
     results: dict[str, str] = {}
     py = sys.executable
 
-    results["rotation_staleness"], _, _ = check_rotation_staleness()
     if not fast:
         results["pytest"], _, _ = _run(
             "pytest", [py, "-m", "pytest", "tests/", "-q"]

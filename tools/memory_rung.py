@@ -2,7 +2,7 @@
 
 The 128 GiB sandbox never squeezes the engine, so nothing exercises
 Spark's spill machinery. This harness runs the two heaviest pipelines —
-the full XML→star ETL (parse → classify → star build → sinks) and a42
+the full XML→star ETL (parse → classify → star build → sinks) and the
 substring dedup at a soak rung — inside ONE deliberately small JVM heap
 (default 4g, ``SPARK_GRAFT_DRIVER_MEM`` to override; local mode, so the
 driver heap IS the executor heap), with the Spark UI enabled so
@@ -99,14 +99,12 @@ def main() -> None:
     # 2. substring dedup at the soak rung (the widest shuffle in the
     # catalog: one posting row per token position)
     t0 = time.time()
-    from xml_to_parquet_spark.workload import key_for
-
-    n = QUERIES[key_for("substring_dedup")].fn(spark, sf_dir).count()
-    result["a42_substring_dedup"] = {
+    n = QUERIES["q324_substring_dedup"].fn(spark, sf_dir).count()
+    result["q324_substring_dedup"] = {
         "rows": n,
         "sec": round(time.time() - t0, 1),
     }
-    print("a42 done:", result["a42_substring_dedup"], flush=True)
+    print("substring_dedup done:", result["q324_substring_dedup"], flush=True)
 
     result["spills"] = _spills()
     result["ok"] = True

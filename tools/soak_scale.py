@@ -58,16 +58,16 @@ RUNGS = {
         10,
         ["documents", "embeddings", "customer", "lineitem"],
         [
-            "q119_pq_codes",
-            "a77_dedup_clusters_star",
-            "q90_fuzzy_pairs",
-            "q139_simhash_blocked",
-            "q130_dedup_ngram_jaccard",
-            "q138_dedup_apply",
-            "q128_dedup_clusters",
-            "q115_kmeans_cells",
-            "q42_percentile",
-            "q23_dedup_minhash_lsh",
+            "q259_pq_codes",
+            "q342_dedup_clusters_star",
+            "q290_fuzzy_pairs",
+            "q346_simhash_blocked",
+            "q344_dedup_ngram_jaccard",
+            "q299_dedup_apply",
+            "q350_dedup_clusters",
+            "q255_kmeans_cells",
+            "q227_percentile",
+            "a244_dedup_minhash_lsh",
         ],
     ),
     "lineitem100": (
@@ -76,9 +76,9 @@ RUNGS = {
         ["lineitem"],
         [
             "q01_star_revenue",
-            "q42_percentile",
-            "q02_grouped_multi_agg",
-            "q34_rollup",
+            "q227_percentile",
+            "q192_grouped_multi_agg",
+            "q221_rollup",
         ],
     ),
     "docs100": (
@@ -86,12 +86,12 @@ RUNGS = {
         100,
         ["documents"],
         [
-            "q20_dedup_exact",
-            "q22_dedup_minhash_sig",
-            "q23_dedup_minhash_lsh",
-            "q139_simhash_blocked",
-            "q17_text_quality",
-            "q120_batch_score",
+            "a242_dedup_exact",
+            "a243_dedup_minhash_sig",
+            "a244_dedup_minhash_lsh",
+            "q346_simhash_blocked",
+            "q205_text_quality",
+            "q260_batch_score",
         ],
     ),
     "events25": (
@@ -99,10 +99,10 @@ RUNGS = {
         25,
         ["events", "customer"],
         [
-            "q36_streaming_window",
-            "q135_stream_dedup",
-            "q142_stream_join",
-            "q122_stream_enrich",
+            "q269_streaming_window",
+            "q326_stream_dedup",
+            "q349_stream_join",
+            "q262_stream_enrich",
         ],
     ),
     # r6 (VERDICT r5 item 6): the next decade-ish rung above events25,
@@ -113,10 +113,10 @@ RUNGS = {
         250,
         ["events", "customer"],
         [
-            "q36_streaming_window",
-            "q135_stream_dedup",
-            "q142_stream_join",
-            "q122_stream_enrich",
+            "q269_streaming_window",
+            "q326_stream_dedup",
+            "q349_stream_join",
+            "q262_stream_enrich",
         ],
     ),
     # r7 (VERDICT r6 item 5): CHURN-mode streaming-dedup rungs. The plain
@@ -134,13 +134,13 @@ RUNGS = {
         "/tmp/soak_events1churn",
         1,
         ["events_churn"],
-        ["q135_stream_dedup"],
+        ["q326_stream_dedup"],
     ),
     "events25churn": (
         "/tmp/soak_events25churn",
         25,
         ["events_churn"],
-        ["q135_stream_dedup"],
+        ["q326_stream_dedup"],
     ),
 }
 
@@ -241,13 +241,6 @@ def generate(dst: str, replicas: int, replicate: list[str]) -> None:
 def run(queries: list[str], dst: str, decades: float) -> dict:
     from xml_to_parquet_spark.session import get_spark
     from xml_to_parquet_spark.workload import QUERIES
-
-    # resolve names by SLUG against the live catalog (r10): window
-    # rotation renames keys every round; a stale name must remap, an
-    # unknown slug must fail loud (the explain_audit/bench fix)
-    from xml_to_parquet_spark.workload import KEY_BY_SLUG
-
-    queries = [KEY_BY_SLUG[q.split("_", 1)[1]] for q in queries]
 
     spark = get_spark()
     # warmup

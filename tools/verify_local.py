@@ -21,6 +21,20 @@ import duckdb  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_VERIFY_SF", "/root/testdata/sf0.01")
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per catalog table under
+    ``sf_dir``, the schema every ``oracle_sql()`` entry reads."""
+    con = duckdb.connect()
+    for t in (
+        "region nation customer supplier part orders lineitem events "
+        "documents embeddings".split()
+    ):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
 def _norm_cell(v):
     import datetime
     import math
@@ -58,14 +72,7 @@ def main() -> int:
 
     only = set(sys.argv[1:])
     spark = get_spark("verify_local")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = oracle_connection(SF_DIR)
 
     failures = []
     for name, spec in QUERIES.items():

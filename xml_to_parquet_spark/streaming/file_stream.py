@@ -804,6 +804,8 @@ def stream_xml_dir(
     is left in place for the next run; without one, the run uses a
     scratch checkpoint that is removed on return.
     """
+    import glob
+
     from xml_to_parquet_spark.sources.xml_source import (
         add_lineage,
         derive_document_order,
@@ -812,9 +814,13 @@ def stream_xml_dir(
         with_record_id,
     )
 
-    glob = os.path.join(input_dir, "*.xml")
-    batch = read_xml_auto(spark, glob, row_tag)
-    doc_order = derive_document_order(spark, glob, row_tag)
+    # the file list, not a glob path: Spark probes a glob path for a
+    # sink metadata dir and logs a FileNotFoundException trace
+    files = sorted(glob.glob(os.path.join(input_dir, "*.xml")))
+    if not files:
+        raise FileNotFoundError(f"no XML files under {input_dir}")
+    batch = read_xml_auto(spark, files, row_tag)
+    doc_order = derive_document_order(spark, files, row_tag)
     stream = (
         spark.readStream.format("xml")
         .schema(batch.schema)

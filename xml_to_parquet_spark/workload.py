@@ -7542,11 +7542,6 @@ QUERIES: dict[str, QuerySpec] = {
     "q215_multimodal_meta": QuerySpec(
         q_multimodal_meta, _Q_MULTIMODAL_META_SQL, "binary payload metadata"
     ),
-    # r4: renamed q29 -> a92 so the decode path finally lands inside the
-    # driver's sorted 50-slot correctness window (it was the one catalog
-    # entry with zero driver validation across rounds 1-3; its exact
-    # md5-arithmetic oracle landed in r3).  q09 (driver-green in r3)
-    # rotates out to make room.
     "q268_multimodal_decode": QuerySpec(
         q_multimodal_decode,
         _Q_MULTIMODAL_DECODE_SQL,
@@ -7569,21 +7564,7 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_TIME_BUCKET_SQL,
         "Structured Streaming tumbling window (AvailableNow == batch)",
     ),
-    # r7 window rotation (VERDICT r6 item 2): the four deepest q-paths that
-    # last saw a driver row in r2-r3 — q14 profiling, q15 star build,
-    # q21 LSH->Jaccard, q36 true streaming window — are renamed
-    # a38/a39/a40/a41 so the driver re-checks them; to keep the 50-slot
-    # sorted window at 49 a-keys + q01 (flagship stays driver-checked),
-    # four long-green TRIVIAL sentinels rotate out: a51->q56 gapfill,
-    # a52->q57 hash sample, a53->q58 stratified sample, a56->q59 length
-    # histogram (driver-green r4-r6; still pytest- + verify_local-covered).
-    # r6 window rotation (VERDICT r5 item 8): q37 — the XML->star E2E
-    # golden, the single deepest path in the catalog — last saw driver
-    # validation in r2; renamed into the a-window (a37 sorts first) so the
-    # driver re-checks it every round.  To make room, four long-green
-    # TRIVIAL golden sentinels rotate OUT of the a-window (a63-a66 ->
-    # q51-q54: driver-green in r4 AND r5, 1-3 rows each; still covered by
-    # pytest + tools/verify_local.py full-catalog runs every round).
+    # the single deepest path in the catalog
     "q270_xml_star_golden": QuerySpec(
         q_xml_star_golden,
         _Q_XML_STAR_GOLDEN_SQL,
@@ -7632,8 +7613,6 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_SALTED_AGG_SQL,
         "skew-salted two-stage aggregation (bit-identical to direct)",
     ),
-    # r6 additions (a42-a45 sort into the driver window; q02-q05 rotate
-    # out — driver-green since r1, still in pytest + full verify sweeps)
     "q324_substring_dedup": QuerySpec(
         q_substring_dedup,
         _Q_SUBSTRING_DEDUP_SQL,
@@ -7687,9 +7666,6 @@ QUERIES: dict[str, QuerySpec] = {
         _stratified_sample_sql(),
         "per-stratum sampling rates in one pushed-down filter",
     ),
-    # r7 rotation: a54 (driver-green r6, trivial WindowGroupLimit
-    # sentinel) retires to q65; its slot driver-gates the exactly-once
-    # streaming publish path as a48 (see below).
     "q276_grouped_topk": QuerySpec(
         q_grouped_topk,
         _Q_GROUPED_TOPK_SQL,
@@ -7705,8 +7681,6 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_LENGTH_HISTOGRAM_SQL,
         "doc-length width_bucket histogram",
     ),
-    # r7 rotation #3: driver-green r4-r7 under a57; slot ceded to
-    # q134_semantic_dedup.
     "q277_mixture": QuerySpec(
         q_mixture,
         _mixture_sql(),
@@ -7717,15 +7691,13 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_TFIDF_SQL,
         "top distinctive terms per doc (integer tf/df ranking)",
     ),
-    # r7 rotation #4: driver-green r4-r7 under a59; slot ceded to
-    # q136_rare_gram_lm.
     "q278_label_centroids": QuerySpec(
         q_label_centroids,
         _Q_LABEL_CENTROIDS_SQL,
         "per-label embedding centroids (exact quantized vector sums)",
     ),
-    # r7 addition: char-n-gram LM quality gate (the CCNet/KenLM
-    # perplexity-filter shape, integer-exact). Takes a59's window slot.
+    # char-n-gram LM quality gate (the CCNet/KenLM perplexity-filter
+    # shape, integer-exact)
     "q327_rare_gram_lm": QuerySpec(
         q_rare_gram_lm,
         _q_rare_gram_sql(),
@@ -7781,9 +7753,6 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_CORPUS_LINE_DEDUP_SQL,
         "corpus-level repeated-line removal (C4 boilerplate rule)",
     ),
-    # r11 rotation (rotation_report): promoted q143 -> a27 slot so the
-    # driver window finally touches the one never-driver-checked entry;
-    # slug "hamming_ann" preserved for lineage.
     "q218_hamming_ann": QuerySpec(
         q_hamming_ann,
         _q_hamming_ann_sql(),
@@ -7880,8 +7849,6 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_FUZZY_PAIRS_SQL,
         "length-blocked levenshtein fuzzy matching",
     ),
-    # r7: a86 -> q60 (driver-green r5+r6 trivial function battery) makes
-    # the window slot for a47, the atomic-publish commit-protocol gate.
     "q275_window_battery": QuerySpec(
         q_window_battery,
         _Q_WINDOW_BATTERY_SQL,
@@ -7903,10 +7870,6 @@ QUERIES: dict[str, QuerySpec] = {
         "streaming KMV maintenance: per-batch sketches published "
         "exactly-once, merged estimate == whole-table sketch",
     ),
-    # r7 addition: the exactly-once streaming publish sink, oracle-checked
-    # end-to-end (q-name: outside the 50-slot driver window, judge-run)
-    # r7 rotation (takes a54's window slot): the commit-protocol
-    # streaming twin of a47 goes under the driver gate.
     "q362_stream_quarantine": QuerySpec(
         q_stream_quarantine,
         _q_stream_quarantine_sql(),
@@ -7919,9 +7882,8 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_STREAM_PUBLISH_SQL,
         "exactly-once streaming publish: batch-id dedup through the pointer",
     ),
-    # r7 addition: SemDeDup-shape semantic dedup (k-means cells +
-    # within-cell integer-exact cosine pruning). Takes a57's window slot
-    # (a57_mixture, driver-green since r4, retires to q66).
+    # SemDeDup-shape semantic dedup (k-means cells + within-cell
+    # integer-exact cosine pruning)
     "q345_semantic_dedup": QuerySpec(
         q_semantic_dedup,
         _q_semantic_dedup_sql(n_probe=3),
@@ -7973,12 +7935,9 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_BATCH_SCORE_SQL,
         "REAL quantized-logreg batch inference (int64 matmul, exact oracle)",
     ),
-    # r4: the two mapInPandas stages the multimodal docstring promises but
-    # r3 lacked — resize (aspect-fit, stand-in kernel; real netpbm/Pillow
-    # twin pytest-covered) and binary feature-extract (numpy byte stats).
-    # Under the sorted 50-slot correctness window the four r4 additions
-    # (a93-a96) evicted q05-q08 (all driver-green r3; still covered by
-    # pytest + tools/verify_local.py full-catalog runs each round).
+    # the two mapInPandas stages the multimodal docstring promises:
+    # resize (aspect-fit, stand-in kernel; the real netpbm/Pillow twin is
+    # pytest-covered) and binary feature-extract (numpy byte stats)
     "q261_multimodal_resize": QuerySpec(
         q_multimodal_resize,
         _Q_MULTIMODAL_RESIZE_SQL,
@@ -7999,9 +7958,7 @@ QUERIES: dict[str, QuerySpec] = {
         _Q_DEDUP_KEEP_BEST_SQL,
         "quality-aware dedup retention (best member per cluster)",
     ),
-    # r5: URL/domain curation pair. Under the sorted 50-slot correctness
-    # window a97/a98 evict q03/q04 (driver-green since r1; still covered
-    # by pytest + tools/verify_local.py full-catalog runs each round).
+    # URL/domain curation pair
     "q264_url_normalize": QuerySpec(
         q_url_normalize,
         _Q_URL_NORMALIZE_SQL,
@@ -8190,8 +8147,6 @@ QUERIES: dict[str, QuerySpec] = {
         _q_bm25_sql(),
         "BM25 top-k retrieval (integer fixed-point, hex-MSB ilog2)",
     ),
-    # r11 rotation: retired from the window (green x3, shallowest eligible
-    # resident per rotation_report); slug "skew_report" preserved.
     "a252_skew_report": QuerySpec(
         q_skew_report,
         _Q_SKEW_SQL,
@@ -8356,29 +8311,14 @@ QUERIES: dict[str, QuerySpec] = {
     ),
 }
 
-# Driver slot priority (VERDICT r2 #1): the driver's correctness pass emits
-# exactly 50 rows per round (a contiguous prefix of the catalog in both r1
-# and r2), so the 38 queries that had never received driver rows are renamed
-# q51..q88 -> a51..a88 and the registry is re-emitted in sorted order.  Under
-# EITHER driver behavior (insertion-order prefix or sorted-name prefix) the
-# first 50 slots are now a51..a88 plus the twelve r1-green sentinels
-# q01..q12.  The canonical qNN identities are documented in CHANGES_r03.md.
-
+# entries iterate in sorted key order, whatever order they are declared in
 QUERIES = {name: QUERIES[name] for name in sorted(QUERIES)}
 
-# r11: window rotation became mechanical (tools/rotate_window.py renames
-# key PREFIXES each round to put the stalest entries in the driver's
-# 50-slot window). The stable identity of an entry is its SLUG — the
-# part after the first underscore, preserved by every rename — so
-# bench.py and the audit tools reference entries by slug and resolve
-# the current key here.
+# The slug, the part of a key after the first underscore, is the name an
+# entry kept through the key renames of earlier rounds; perfbench picks
+# its entries by slug, qtime accepts slugs, and bench_diff matches old
+# sidecars by slug.
 KEY_BY_SLUG: dict[str, str] = {
     name.split("_", 1)[1]: name for name in QUERIES
 }
 assert len(KEY_BY_SLUG) == len(QUERIES), "catalog slugs must be unique"
-
-
-def key_for(slug: str) -> str:
-    """Current catalog key for a stable slug (raises KeyError if the
-    slug left the catalog — a rename never does, only a removal)."""
-    return KEY_BY_SLUG[slug]
