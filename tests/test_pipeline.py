@@ -150,3 +150,68 @@ def test_schema_sample_semantics_beyond_sample(spark, tmp_path):
     assert "name" in res.catalog
     assert "surprise" not in res.catalog
     assert "surprise" not in fact.columns
+
+
+def _jobs_since(spark, floor: int) -> list:
+    """Jobs with an id above ``floor``, read from the driver's status
+    store once the listener bus has delivered every event."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    it = sc.statusStore().jobsList(None).iterator()
+    jobs = []
+    while it.hasNext():
+        j = it.next()
+        if j.jobId() > floor:
+            jobs.append(j)
+    return jobs
+
+
+def test_etl_pass_job_count(spark, tmp_path):
+    """One validated, atomically published pass over a small seeded
+    corpus runs at most 20 Spark jobs, and none of them has one task per
+    input file (a per-path listing job or a per-file re-read).  Job
+    counts do not vary from run to run, so this pins the pass's shape."""
+    from perfbench import xml_inputs
+
+    n_files = 40  # above Spark's parallel-listing threshold of 32 paths
+    corpus = xml_inputs.generate(
+        str(tmp_path / "input"), 7, n_files, 5,
+        invalid_share=0.05, with_xsd=True,
+    )
+    floor = max((j.jobId() for j in _jobs_since(spark, -1)), default=-1)
+    res = process_xml_to_parquet(
+        spark, corpus.input_dir, str(tmp_path / "out"),
+        validate=True, atomic=True,
+    )
+    jobs = _jobs_since(spark, floor)
+    assert len(jobs) <= 20, len(jobs)
+    assert all(j.numTasks() != n_files for j in jobs), [
+        j.numTasks() for j in jobs
+    ]
+    m = res.manifest.collect()[0]
+    assert m.files_validated == n_files
+    assert m.records_total == corpus.valid_records
+
+
+def test_underscore_file_excluded_everywhere(spark, io_dirs):
+    """Spark's listing skips ``_*`` names; validation follows the same
+    rule, so validation, records and manifest agree on the file set."""
+    inp, out = io_dirs
+    (inp / "a.xml").write_text(PRODUCTS_XML)
+    (inp / "b.xml").write_text(ORDERS_XML)
+    (inp / "_meta.xml").write_text(PRODUCTS_XML)
+    res = process_xml_to_parquet(spark, str(inp), str(out), validate=True)
+    validated = {
+        os.path.basename(r.source_file_path) for r in res.validation.collect()
+    }
+    assert validated == {"a.xml", "b.xml"}
+    fact = spark.read.parquet(res.paths["fact_main"])
+    names = {
+        r.source_file_name
+        for r in fact.select("source_file_name").distinct().collect()
+    }
+    assert names == {"a.xml", "b.xml"}
+    assert fact.count() == 5  # 3 products + 2 orders
+    m = res.manifest.collect()[0]
+    assert (m.files_processed, m.files_validated, m.files_valid) == (2, 2, 2)
+    assert m.records_total == 5

@@ -143,7 +143,8 @@ def test_star_schema_no_measures_gets_record_count(spark):
 
 
 def test_star_fact_never_shuffled(spark, products_df):
-    """The star build's physical plan must attach keys via broadcast joins."""
+    """Keys attach by map lookup: the fact's executed plan has no
+    exchange and no join, before and after adaptive execution."""
     catalog = {
         "id": {"classification": "identifier"},
         "category": {"classification": "dimension"},
@@ -151,6 +152,62 @@ def test_star_fact_never_shuffled(spark, products_df):
         "price": {"classification": "measure"},
     }
     star = build_star_schema(products_df, catalog, include_audit=False)
-    plan = star.fact._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    qe = star.fact._jdf.queryExecution()
+    before = qe.executedPlan().toString()
+    assert len(star.fact.collect()) == 3
+    after = qe.executedPlan().toString()  # the final adaptive plan
+    for plan in (before, after):
+        assert "Exchange" not in plan, plan
+        assert "Join" not in plan and "CartesianProduct" not in plan, plan
+
+
+_DIM_ROWS = [
+    ("1", "b", 10), ("2", None, 9), ("3", "a", 10), ("4", "b", None),
+    ("5", "c", 100), ("6", None, 9), ("7", "a", 10),
+]
+
+
+def test_star_dimensions_match_surrogate_keys(spark):
+    """Dimensions built from the one value aggregate equal
+    ``surrogate_keys`` on columns with nulls and duplicates (string and
+    numeric order), and the fact keys equal the left join on them."""
+    from xml_to_parquet_spark.operators.window import surrogate_keys
+
+    df = spark.createDataFrame(_DIM_ROWS, "id string, g string, n int")
+    catalog = {
+        "id": {"classification": "identifier"},
+        "g": {"classification": "dimension"},
+        "n": {"classification": "dimension"},
+    }
+    star = build_star_schema(df, catalog, include_audit=False)
+    for c in ("g", "n"):
+        key = f"{c}_key"
+        got = star.dimensions[c].select(key, c).collect()
+        want = surrogate_keys(df, c).collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want)), c
+        joined = df.join(surrogate_keys(df, c), c, "left")
+        assert sorted(map(tuple, star.fact.select("id", key).collect())) == (
+            sorted(map(tuple, joined.select("id", key).collect()))
+        ), c
+        assert dict(star.fact.dtypes)[key] == "int"
+    n_rows = star.dimensions["n"].orderBy("n_key").collect()
+    assert [(r.n_key, r.n) for r in n_rows] == [(1, 9), (2, 10), (3, 100)]
+
+
+def test_star_all_null_dimension(spark):
+    """An all-null dimension column gives an empty dimension and null
+    keys: the parent left join's result."""
+    df = spark.createDataFrame(
+        [("1", None), ("2", None)], "id string, g string"
+    )
+    catalog = {
+        "id": {"classification": "identifier"},
+        "g": {"classification": "dimension"},
+    }
+    star = build_star_schema(df, catalog, include_audit=False)
+    dim = star.dimensions["g"]
+    assert dim.columns == ["g_key", "g", "created_date", "is_active"]
+    assert dim.count() == 0
+    rows = star.fact.select("id", "g_key").orderBy("id").collect()
+    assert [(r.id, r.g_key) for r in rows] == [("1", None), ("2", None)]
+    assert dict(star.fact.dtypes)["g_key"] == "int"

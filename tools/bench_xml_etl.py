@@ -17,7 +17,9 @@ flatten → classify → star build → parquet sinks + manifests):
   ENABLE_VALIDATION=TRUE comparison row).
 
 Usage: python tools/bench_xml_etl.py [--files=100] [--keep]
-Prints one JSON line with measured MB/s and the reference-derived floors.
+Prints one JSON line with measured MB/s, the Spark jobs one pass runs
+(constant from pass to pass: the regression signal that wall-time drift
+cannot blur) and the reference-derived floors.
 """
 
 from __future__ import annotations
@@ -91,6 +93,24 @@ def run_once(spark, inp: str, out_name: str, validate: bool) -> float:
     return time.time() - t0
 
 
+def last_job_id(spark) -> int:
+    """Highest Spark job id the driver has started, -1 before the first:
+    the difference across a pass is the number of jobs it ran."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return max(ids, default=-1)
+
+
+def timed_passes(spark, inp: str, out_name: str, validate: bool, n: int):
+    """Fastest of ``n`` passes, and the jobs of the last one."""
+    best = float("inf")
+    for _ in range(n):
+        j0 = last_job_id(spark)
+        best = min(best, run_once(spark, inp, out_name, validate=validate))
+        jobs = last_job_id(spark) - j0
+    return best, jobs
+
+
 def main() -> None:
     n_files = 100
     keep = False
@@ -129,13 +149,9 @@ def main() -> None:
     # min-of-3 (same rationale as bench.py: the box shows sporadic
     # multi-second freezes; min measures the engine's steady-state cost)
     trials = int(os.environ.get("XML_ETL_TRIALS", "3"))
-    plain = min(
-        run_once(spark, inp, "out_plain", validate=False)
-        for _ in range(trials)
-    )
-    validated = min(
-        run_once(spark, inp, "out_validated", validate=True)
-        for _ in range(max(1, trials - 1))
+    plain, jobs = timed_passes(spark, inp, "out_plain", False, trials)
+    validated, jobs_validated = timed_passes(
+        spark, inp, "out_validated", True, max(1, trials - 1)
     )
 
     # reference README.md:408-410 rows, keyed by file count
@@ -148,7 +164,9 @@ def main() -> None:
         "sec": round(plain, 2),
         "mb_per_s": round(mb / plain, 2),
         "files_per_s": round(n_files / plain, 2),
+        "jobs_per_pass": jobs,
         "sec_validated": round(validated, 2),
+        "jobs_per_pass_validated": jobs_validated,
         "validation_overhead_pct": round(100 * (validated / plain - 1), 1),
         "reference_sec": ref_sec,
         "reference_validated_sec": ref_val_sec,

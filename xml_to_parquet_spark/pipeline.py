@@ -1,19 +1,25 @@
 """End-to-end XML→star-schema-Parquet pipeline (reference main.R:58-126).
 
 The reference's orchestration (worker pools, 50-file batches, globals
-shipping, parallel-parse/sequential-write) collapses into ONE lazy Spark
-plan with two actions:
+shipping, parallel-parse/sequential-write) collapses into one lazy parse
+plan and a fixed set of Spark jobs, none of them per file:
 
-    action 1 (small): profile a sample → classification catalog
-    action 2:         parse-all → star transform → parquet write
+    helper threads: business-key scan, per-file validation — each
+                    collects its ≤ #files rows once
+    profile:        classification catalog from a sample of the records
+    star build:     ONE aggregate for every dimension's values
+    sinks:          fact write, one write per dimension, one manifest
+                    aggregate; every other report is written driver-side
 
-Batching, memory hygiene, and the parallel/sequential split are the
-scheduler's job (SURVEY §3.1 "Spark shape").
+Every per-file intermediate is a value computed once: later consumers
+(validation gate, key attach, manifest counts, error summary) read the
+collected rows, never the files again.  Batching, memory hygiene, and the
+parallel/sequential split are the scheduler's job (SURVEY §3.1 "Spark
+shape").
 """
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -26,17 +32,21 @@ from xml_to_parquet_spark.plans.star_transformer import (
     build_star_schema,
     validate_star_schema,
 )
+from xml_to_parquet_spark.session import local_frame
 from xml_to_parquet_spark.sinks.writers import (
     Report,
     parquet_metadata,
     processing_manifest,
     schema_documentation,
+    write_csv_part,
     write_csv_report,
     write_star_schema,
 )
 from xml_to_parquet_spark.sources.xml_source import (
+    XML_FILE_GLOB,
     attach_business_keys,
     extract_business_keys,
+    list_xml_files,
     read_xml_records,
 )
 from xml_to_parquet_spark.validation.xml_validation import (
@@ -76,79 +86,80 @@ def process_xml_to_parquet(
     snapshot readable, and the star becomes visible as one consistent
     table-version set — closing the reference's unguarded in-place
     overwrite (parquet_writer.R:53-81).
+
+    The input is the ``*.xml`` files directly under ``input_dir`` that
+    Spark's listing keeps (``list_xml_files``: no ``_*`` or ``.*``
+    names); validation, records and manifest all see that one set.
     """
-    pattern = os.path.join(input_dir, "*.xml")
-    files = sorted(_glob.glob(pattern))
+    files = list_xml_files(input_dir)
     if not files:
         raise FileNotFoundError(f"no XML files under {input_dir}")
+    # every Spark read lists input_dir itself, filtered to the same set
+    xml_only = {"pathGlobFilter": XML_FILE_GLOB}
 
     cached = bool(output_dir)
 
-    # 1+2+3 overlapped: the business-key scan (reference S6; a small
-    # Spark job over file heads) and the per-file validation pass
-    # (reference ENABLE_VALIDATION; mapInPandas re-reading every file)
-    # run on helper threads while the driver does its own CPU-bound
-    # ingest prep (row-tag probe, document-order pull, ElementTree schema
-    # derivation over the sample files) — executors vs driver are
-    # disjoint resources, and sequentially these cost ~1.5 s of the
-    # 100-file ETL benchmark.  Spark sessions are safe for concurrent
-    # job submission from threads.
+    # 1+2+3 overlapped: the business-key scan (reference S6; one
+    # wholetext job) and the per-file validation pass (reference
+    # ENABLE_VALIDATION; one mapInPandas job) run on helper threads while
+    # the driver does its own CPU-bound ingest prep (row-tag probe,
+    # document-order pull, ElementTree schema derivation over the sample
+    # files) — executors vs driver are disjoint resources.  Each returns
+    # its ≤ #files rows as a driver-held frame, so no later consumer
+    # re-reads or re-validates a file.  Spark sessions are safe for
+    # concurrent job submission from threads.
     prep_pool = keys_future = validation_future = None
-    validation = None
-    if extract_comments or (validate and cached):
+    keys = validation = None
+    if extract_comments or validate:
         prep_pool = ThreadPoolExecutor(max_workers=2)
-    if extract_comments:
-        keys_future = prep_pool.submit(extract_business_keys, spark, pattern)
-    if validate:
-        validation = validate_files(spark, files, schema_dir=schema_dir)
-        if cached:
-            # one row per file, but each downstream action that references
-            # it (gate join, manifest counts, error summary) would re-run
-            # the whole per-file validation pass uncached — persist, and
-            # materialize on a helper thread during the driver prep
-            validation = validation.persist()
-            validation_future = prep_pool.submit(validation.count)
+    try:
+        if extract_comments:
+            keys_future = prep_pool.submit(
+                extract_business_keys, spark, input_dir, **xml_only
+            )
+        if validate:
+            validation_future = prep_pool.submit(
+                validate_files, spark, files, schema_dir=schema_dir
+            )
 
-    # ingest: parse + flatten + lineage (lazy).  XML structure comes
-    # from the first SCHEMA_SAMPLE_SIZE files (driver-side derivation,
-    # Spark-discovery fallback — the reference's first-100-files
-    # semantics, main.R:19,95) so the reader never runs its full-corpus
-    # discovery scan before job one.
-    records = read_xml_records(
-        spark,
-        pattern,
-        id_attribute=id_attribute,
-        schema_sample_paths=files[:SCHEMA_SAMPLE_SIZE],
-    )
+        # ingest: parse + flatten + lineage (lazy).  XML structure comes
+        # from the first SCHEMA_SAMPLE_SIZE files (driver-side derivation,
+        # Spark-discovery fallback — the reference's first-100-files
+        # semantics, main.R:19,95) so the reader never runs its
+        # full-corpus discovery scan before job one.
+        records = read_xml_records(
+            spark,
+            input_dir,
+            id_attribute=id_attribute,
+            schema_sample_paths=files[:SCHEMA_SAMPLE_SIZE],
+            **xml_only,
+        )
+        if keys_future is not None:
+            keys = keys_future.result()
+        if validation_future is not None:
+            validation = validation_future.result()
+    finally:
+        if prep_pool is not None:
+            prep_pool.shutdown()
 
-    # 2. validation gate join (validation itself already in flight)
+    # 2. validation gate: a filter on the passing paths
     if validation is not None:
         records = gate_valid(records, validation)
+    # 3. comment business keys
+    if keys is not None and not keys.isEmpty():
+        records = attach_business_keys(records, keys)
 
-    # 3. comment business keys (join deferred until the scan finishes)
-    if prep_pool is not None:
-        try:
-            if keys_future is not None:
-                keys = keys_future.result()
-            if validation_future is not None:
-                validation_future.result()
-        finally:
-            prep_pool.shutdown()
-        if keys_future is not None and not keys.isEmpty():
-            records = attach_business_keys(records, keys)
-
-    # The pipeline fans out into several actions over the same parsed rows
-    # (profile agg, fact write, one write per dimension, manifest counts).
-    # Uncached, EVERY action re-parses all the XML; persist once for the
-    # fan-out and release in the finally (cache-hygiene rule: no persist
-    # outlives its function).  Skipped when nothing is written — the lazy
-    # single-plan composition case.
+    # The pipeline fans out into several full passes over the same parsed
+    # rows (dimension-value aggregate, fact write, manifest aggregate;
+    # the profile reads a sample).  Uncached, EVERY pass re-parses all the
+    # XML; persist once for the fan-out and release in the finally
+    # (cache-hygiene rule: no persist outlives its function).  Skipped
+    # when nothing is written — the lazy single-plan composition case.
     # 100 TB note: persist() is MEMORY_AND_DISK — right while the parsed
-    # batch fits the cluster's storage tier.  Beyond that, the same
-    # fan-out pattern holds with the fact written FIRST and the dim/
-    # manifest passes re-reading the (columnar, pruned) parquet instead
-    # of the cache; swap the persist for that once batches outgrow
-    # executor storage.
+    # batch fits the cluster's storage tier.  Beyond that, write the fact
+    # FIRST (keeping the dimension value columns) and run the dimension
+    # and manifest aggregates over the columnar, pruned parquet instead of
+    # the cache.
     if cached:
         records = records.persist()
     manifest_pool = manifest_future = None
@@ -166,7 +177,7 @@ def process_xml_to_parquet(
             if c in records.columns:
                 catalog[c] = {"classification": "audit"}
 
-        # 5. star transform (global surrogate keys)
+        # 5. star transform (global surrogate keys, one aggregate job)
         star = build_star_schema(
             records, catalog, id_column="record_id"
         )
@@ -200,11 +211,9 @@ def process_xml_to_parquet(
                 # the manifest was materialized UP THERE, while records
                 # are persisted: callers (CLI summary, tests) collect it
                 # after the unpersist below, and a frame over the records
-                # would re-run the whole XML parse just to count rows.
-                # Bounded reports are written from the driver's rows
-                # (see write_csv_report).
-                result.manifest = spark.createDataFrame(
-                    manifest_rows, manifest_schema
+                # would re-run the whole XML parse just to count rows
+                result.manifest = local_frame(
+                    spark, manifest_rows, manifest_schema
                 )
                 write_csv_report(
                     Report(tuple(manifest_schema.fieldNames()), manifest_rows),
@@ -224,15 +233,16 @@ def process_xml_to_parquet(
                 )
                 if validation is not None:
                     # error channel (reference error_summary.csv,
-                    # parquet_writer.R:13-26): one row per failed file
-                    from pyspark.sql import functions as F
-
-                    errors = validation.filter(F.col("status") != "success")
-                    if not errors.isEmpty():
-                        write_csv_report(
-                            errors,
+                    # parquet_writer.R:13-26): one row per failed file,
+                    # from the validation rows
+                    errors = [
+                        r for r in validation.collect()
+                        if r.status != "success"
+                    ]
+                    if errors:
+                        write_csv_part(
+                            Report(tuple(validation.columns), errors),
                             os.path.join(output_dir, "error_summary.csv"),
-                            mode="overwrite",
                         )
     finally:
         if manifest_pool is not None:
@@ -241,8 +251,6 @@ def process_xml_to_parquet(
             manifest_pool.shutdown()
         if cached:
             records.unpersist()
-            if validation is not None:
-                validation.unpersist()
     return result
 
 

@@ -7,6 +7,7 @@ from xml_to_parquet_spark.plans.star_transformer import (
     StarSchema,
     build_star_schema,
     build_dimension_table,
+    dimension_values,
     aggregate_fact_data,
     validate_star_schema,
 )
@@ -18,6 +19,7 @@ __all__ = [
     "StarSchema",
     "build_star_schema",
     "build_dimension_table",
+    "dimension_values",
     "aggregate_fact_data",
     "validate_star_schema",
 ]

@@ -15,7 +15,8 @@ session settings transfer to a multi-executor cluster:
 
 It also owns the two per-query resources the package scopes itself:
 session conf overrides (:func:`scoped_conf`) and scratch directories
-(:func:`scratch_dir`, :func:`process_scratch_dir`).
+(:func:`scratch_dir`, :func:`process_scratch_dir`); and the driver-held
+frame (:func:`local_frame`) that small per-file results are returned as.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ import shutil
 import tempfile
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -193,6 +194,24 @@ def scoped_conf(spark: SparkSession, key: str, value):
             spark.conf.set(key, prev)
         else:
             spark.conf.unset(key)
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A frame over rows the driver already holds, planned as a
+    LocalRelation: collecting it runs no Spark job, and no consumer re-runs
+    the work that produced the rows.  (``createDataFrame`` on a list plans
+    an RDD scan, one job per action.)  The rows cross to the JVM as one
+    Arrow table; ``schema`` is a StructType of string/numeric/boolean
+    fields.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _new_scratch(prefix: str) -> str:

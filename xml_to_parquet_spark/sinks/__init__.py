@@ -2,6 +2,7 @@ from xml_to_parquet_spark.sinks.writers import (
     write_star_schema,
     write_parquet,
     write_csv_report,
+    write_csv_part,
     parquet_metadata,
     processing_manifest,
     Report,
@@ -11,6 +12,7 @@ __all__ = [
     "write_star_schema",
     "write_parquet",
     "write_csv_report",
+    "write_csv_part",
     "parquet_metadata",
     "processing_manifest",
     "Report",

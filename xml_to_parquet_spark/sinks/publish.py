@@ -882,7 +882,7 @@ def publish_star_schema(
     def _pub(item):
         name, dim = item
         r = os.path.join(output_dir, f"dim_{name}")
-        v = publish_parquet(dim.dropDuplicates(), r, single_file=True)
+        v = publish_parquet(dim, r, single_file=True)
         return f"dim_{name}", r, v
 
     if star.dimensions:

@@ -4,21 +4,26 @@ Reference parity (/root/reference/R/parquet_writer.R):
 - K1 fact sink:  merge batches → fact_main.parquet, snappy + dictionary
   (parquet_writer.R:53-81). Spark's parquet writer defaults to snappy +
   dictionary; batching disappears (the cluster scheduler replaces it).
-- K2 dim sinks:  dedupe + write dim_<col>.parquet (parquet_writer.R:84-131).
+- K2 dim sinks:  write dim_<col>.parquet (parquet_writer.R:84-131); the
+  reference's dedupe has nothing to do, dimensions are distinct by
+  construction (plans/star_transformer.py).
 - K3 CSV sinks:  error summary, processing manifest (append), parquet
   metadata, validation report (parquet_writer.R:13-26,134-197).
 
 Scale notes: fact writes stay fully parallel (one file per partition);
 ``single_file=True`` coalesces to 1 only for byte-parity with the
 reference's one-file outputs — never do that at 100 TB. The manifest's
-counts are aggregated Spark-side (fixes reference quirk 2: driver-side
-counters that under-count under parallelism); metadata comes from the
-parquet footers.
+record counts are one Spark-side aggregate (fixes reference quirk 2:
+driver-side counters that under-count under parallelism); metadata comes
+from the parquet footers.  Reports are written driver-side from rows the
+driver holds: each is bounded by #files, #tables or #columns.
 """
 
 from __future__ import annotations
 
+import csv
 import os
+import shutil
 from datetime import datetime, timezone
 from typing import NamedTuple
 
@@ -55,8 +60,8 @@ def write_star_schema(
 ) -> dict[str, str]:
     """Write fact + all dimension tables; returns {table: path}.
 
-    Dimensions are deduped before write (reference parquet_writer.R:115-116)
-    — a no-op for globally-built dims, kept as a safety invariant.
+    Dimensions are written as built: distinct by construction, so the
+    reference's dedupe (parquet_writer.R:115-116) is not run.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -72,7 +77,7 @@ def write_star_schema(
     def _write_dim(item: tuple[str, DataFrame]) -> tuple[str, str]:
         name, dim = item
         p = os.path.join(output_dir, f"dim_{name}.parquet")
-        write_parquet(dim.dropDuplicates(), p, single_file=True)
+        write_parquet(dim, p, single_file=True)
         return f"dim_{name}", p
 
     paths[fact_name] = fact_path  # first entry: report row order
@@ -91,37 +96,35 @@ def write_star_schema(
 class Report(NamedTuple):
     """A report whose rows the driver already holds, bounded by
     construction: the run manifest (1 row), parquet metadata (#tables
-    rows), schema documentation (#columns rows)."""
+    rows), schema documentation (#columns rows), error summary (≤ #files
+    rows)."""
 
     columns: tuple[str, ...]
     rows: list[tuple]
 
 
-def write_csv_report(
-    report: DataFrame | Report, path: str, mode: str = "append"
-) -> None:
+def write_csv_report(report: Report, path: str, mode: str = "append") -> None:
     """CSV report sink (reference K3): single file, header, append.
 
-    A :class:`Report` is written driver-side with stdlib csv, without a
-    Spark job: handing its rows to ``createDataFrame`` and collecting
-    them back ran a Python-worker job per report for rows the driver
-    already had.  A DataFrame (error_summary = one row per failed file,
-    unbounded) keeps the distributed single-file write.
-    ``spark.read.csv`` reads both layouts identically.
+    Written driver-side with stdlib csv, without a Spark job: handing the
+    rows to ``createDataFrame`` and collecting them back ran a
+    Python-worker job per report for rows the driver already had.
     """
-    if isinstance(report, Report):
-        import csv
+    write_header = mode == "overwrite" or not os.path.exists(path)
+    with open(path, "w" if mode == "overwrite" else "a", newline="") as fh:
+        w = csv.writer(fh)
+        if write_header:
+            w.writerow(report.columns)
+        w.writerows(["" if v is None else v for v in r] for r in report.rows)
 
-        write_header = mode == "overwrite" or not os.path.exists(path)
-        with open(path, "w" if mode == "overwrite" else "a", newline="") as fh:
-            w = csv.writer(fh)
-            if write_header:
-                w.writerow(report.columns)
-            w.writerows(
-                ["" if v is None else v for v in r] for r in report.rows
-            )
-        return
-    report.coalesce(1).write.mode(mode).option("header", "true").csv(path)
+
+def write_csv_part(report: Report, path: str) -> None:
+    """``report`` in the layout Spark's CSV writer leaves: ``path`` is a
+    directory holding ``part-00000.csv``, replacing what was there
+    (overwrite).  ``spark.read.csv`` reads it like a Spark-written one."""
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    write_csv_report(report, os.path.join(path, "part-00000.csv"), "overwrite")
 
 
 def parquet_metadata(paths: dict[str, str]) -> Report:
@@ -202,23 +205,23 @@ def processing_manifest(
     records: DataFrame,
     validation: DataFrame | None = None,
 ) -> DataFrame:
-    """Run manifest computed Spark-side (reference parquet_writer.R:134-160,
-    fixed per quirk 2): files seen, records parsed, success/error counts."""
-    per_file = records.groupBy("source_file_path").agg(
-        F.count(F.lit(1)).alias("n_records")
-    )
-    agg = per_file.agg(
-        F.count(F.lit(1)).alias("files_processed"),
-        F.sum("n_records").alias("records_total"),
+    """Run manifest (reference parquet_writer.R:134-160, fixed per quirk
+    2): files seen, records parsed, success/error counts.
+
+    One aggregate over the records; the validation counts come from its
+    one-row-per-file rows (jobless from a ``validate_files`` frame) as
+    literals."""
+    agg = records.agg(
+        F.count_distinct("source_file_path").alias("files_processed"),
+        F.count(F.lit(1)).alias("records_total"),
     )
     if validation is not None:
-        vagg = validation.agg(
-            F.count(F.lit(1)).alias("files_validated"),
-            F.sum(
-                (F.col("status") == "success").cast("long")
-            ).alias("files_valid"),
+        status = [r.status for r in validation.select("status").collect()]
+        agg = agg.select(
+            "*",
+            F.lit(len(status)).cast("long").alias("files_validated"),
+            F.lit(status.count("success")).cast("long").alias("files_valid"),
         )
-        agg = agg.crossJoin(vagg)
     return agg.withColumn(
         "run_timestamp",
         F.lit(datetime.now(timezone.utc).isoformat()),

@@ -28,19 +28,27 @@ Reference behavior being re-expressed (/root/reference/R/xml_parser.R):
 Scale notes: one Spark job reads every file in the directory glob
 (parallelism = files × codec splits); the flatten pass is pure column
 expressions (whole-stage codegen, no Python); the business-key pass reads
-each file once more but produces one row per file and broadcasts.
+each file once more but produces one row per file, collected once.
+A directory is read with ``pathGlobFilter`` rather than as a glob: Spark
+lists one root path on the driver, where a glob expands to one root per
+file (listed by a Spark job past ``parallelPartitionDiscovery.threshold``)
+and logs a FileStreamSink metadata-probe warning; ``list_xml_files``
+names the same file set for driver-side consumers.
 """
 
 from __future__ import annotations
 
+import os
 import re
 from collections.abc import Sequence
+from fnmatch import fnmatchcase
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 CANDIDATE_ROW_TAGS = ("record", "Record", "item", "Item")
+XML_FILE_GLOB = "*.xml"
 ATTR_PREFIX = "_"
 VALUE_TAG = "_VALUE"
 
@@ -52,6 +60,32 @@ COMMENT_PATTERNS = {
     "spaced": r"^([A-Za-z]+)\s*:\s*([^:]+)$",
     "numeric_key": r"^([A-Za-z0-9]+):([^:]+)$",
 }
+
+
+def _spark_lists(name: str) -> bool:
+    """Spark's file-listing rule (``HadoopFSUtils.shouldFilterOutPathName``):
+    names starting with ``.`` or ``_`` are skipped, except ``_`` names
+    holding ``=`` (partition dirs) and Parquet's ``_metadata`` /
+    ``_common_metadata``; so are in-flight ``._COPYING_`` files."""
+    hidden = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return not hidden or name.startswith(("_metadata", "_common_metadata"))
+
+
+def list_xml_files(input_dir: str) -> list[str]:
+    """The files a directory read of ``input_dir`` with
+    ``pathGlobFilter=XML_FILE_GLOB`` parses, sorted: regular files directly
+    under it whose names match the glob and pass Spark's listing rule."""
+    return [
+        os.path.join(input_dir, n)
+        for n in sorted(os.listdir(input_dir))
+        if fnmatchcase(n, XML_FILE_GLOB)
+        and _spark_lists(n)
+        and os.path.isfile(os.path.join(input_dir, n))
+    ]
 
 
 # One probe read per path string serves BOTH rowTag resolution and
@@ -661,9 +695,12 @@ def read_xml_records(
     the sample is not parsed.  At the 10,000-file design point it turns a
     full-corpus discovery scan into a bounded sample read.
     """
-    tag = row_tag or resolve_row_tag(spark, path)
+    # the probe reads one file: the first sample file when given, since a
+    # directory ``path`` may list a non-XML sibling first
+    probe = schema_sample_paths[0] if schema_sample_paths else path
+    tag = row_tag or resolve_row_tag(spark, probe)
     doc_order = (
-        derive_document_order(spark, path, tag)
+        derive_document_order(spark, probe, tag)
         if document_order and tag
         else None
     )
@@ -684,18 +721,32 @@ def read_xml_records(
     return df
 
 
+BUSINESS_KEY_SCHEMA = T.StructType(
+    [
+        T.StructField(c, T.StringType())
+        for c in ("source_file_path", "business_key_name", "business_key_value")
+    ]
+)
+
+
 def extract_business_keys(
     spark: SparkSession,
     path: str,
     pattern: str = COMMENT_PATTERNS["standard"],
+    **options: str,
 ) -> DataFrame:
     """Per-file business key from the FIRST XML comment (reference S6).
 
     Returns (source_file_path, business_key_name, business_key_value) for
-    files whose first comment matches ``pattern``. Whole-file text read —
-    one row per file, no UDF.
+    files whose first comment matches ``pattern``. One whole-file text
+    read (``options`` go to the reader, e.g. ``pathGlobFilter``), no UDF.
+    The ≤ #files rows are collected once and returned as a driver-held
+    frame (``session.local_frame``), so emptiness checks, key-name
+    discovery and the attach join never re-read the files.
     """
-    raw = spark.read.text(path, wholetext=True).select(
+    from xml_to_parquet_spark.session import local_frame
+
+    raw = spark.read.options(**options).text(path, wholetext=True).select(
         F.input_file_name().alias("source_file_path"),
         F.col("value"),
     )
@@ -706,14 +757,16 @@ def extract_business_keys(
     inner = pattern.strip("^$")
     name_ = F.regexp_extract(first_comment, f"^{inner}$", 1)
     value_ = F.regexp_extract(first_comment, f"^{inner}$", 2)
-    return (
+    rows = (
         raw.select(
             "source_file_path",
             name_.alias("business_key_name"),
             value_.alias("business_key_value"),
         )
         .filter(F.col("business_key_name") != "")
+        .collect()
     )
+    return local_frame(spark, rows, BUSINESS_KEY_SCHEMA)
 
 
 def attach_business_keys(
@@ -732,10 +785,12 @@ def attach_business_keys(
     out = records.join(F.broadcast(keys), on="source_file_path", how="left")
     if as_columns:
         if key_names is None:
-            key_names = [
-                r[0]
-                for r in keys.select("business_key_name").distinct().collect()
-            ]
+            # first-seen order; a driver-held keys frame collects jobless
+            key_names = list(
+                dict.fromkeys(
+                    r[0] for r in keys.select("business_key_name").collect()
+                )
+            )
         # ONE select with every key column, not a withColumn loop: each
         # withColumn adds an analyzer/optimizer pass over a growing plan,
         # which goes quadratic when a feed carries thousands of distinct

@@ -13,8 +13,9 @@ Reference behavior mirrored here:
   (main.R:153-166) — validation is a FILTER, not a typing source.
 
 Spark-first shape: validation runs as a distributed pandas UDF over the
-file list (each task validates its slice of files), returning a status
-DataFrame that joins back against records on source_file_path.
+file list (each task validates its slice of files).  Its status rows, one
+per file, are collected once and returned as a driver-held frame; the gate
+is a filter on the passing paths, not a join.
 
 Validator ladder per branch (most to least capable, import-gated):
 - XSD: lxml → xmlschema → stdlib subset validator (``xsd_subset.py``:
@@ -35,11 +36,13 @@ The UDF signature/batching is identical on every rung.
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 try:  # import-gated: not in this container; real on a full cluster image
     from lxml import etree as _lxml_etree  # type: ignore
@@ -224,6 +227,14 @@ def well_formed_check(path: str) -> bool:
     return _check_one(path, None)[0] == "success"
 
 
+VALIDATION_SCHEMA = T.StructType(
+    [
+        T.StructField(c, T.StringType())
+        for c in ("source_file_path", "status", "error")
+    ]
+)
+
+
 def validate_files(
     spark: SparkSession,
     files: list[str],
@@ -233,13 +244,17 @@ def validate_files(
     """Distributed per-file validation → (source_file_path, status, error).
 
     Files are validated executor-side via mapInPandas (Arrow-batched; each
-    task opens only its slice). Join the result against parsed records on
-    ``source_file_path`` to gate invalid files out (reference P4 semantics).
+    task opens only its slice), in one job when called.  The rows, one per
+    file and so bounded by the ``files`` list the caller already holds,
+    come back as a driver-held frame (``session.local_frame``): the gate,
+    the manifest counts and the error summary read them without
+    re-validating.  ``gate_valid`` drops records of invalid files
+    (reference P4 semantics).
     """
     # the mapInPandas closure below is pickled by reference to this
     # module — ship the package so workers can import it regardless of
     # the driver's working directory (driver-provided sessions haven't)
-    from xml_to_parquet_spark.session import _ship_package
+    from xml_to_parquet_spark.session import _ship_package, local_frame
 
     _ship_package(spark)
 
@@ -271,34 +286,32 @@ def validate_files(
                 out, columns=["source_file_path", "status", "error"]
             )
 
-    return src.mapInPandas(
-        _validate, "source_file_path string, status string, error string"
-    )
+    rows = src.mapInPandas(_validate, VALIDATION_SCHEMA).collect()
+    return local_frame(spark, rows, VALIDATION_SCHEMA)
+
+
+_FILE_SCHEME = r"^file:/+"
 
 
 def normalize_path(col: F.Column) -> F.Column:
     """Strip the ``file:`` scheme input_file_name() adds, so validation
-    paths (plain) and lineage paths (URI) join correctly."""
-    return F.regexp_replace(col, r"^file:/+", "/")
+    paths (plain) and lineage paths (URI) compare correctly."""
+    return F.regexp_replace(col, _FILE_SCHEME, "/")
 
 
 def gate_valid(records: DataFrame, validation: DataFrame) -> DataFrame:
     """Keep only records from files whose validation status is success.
 
-    Broadcast semi-join on file path (validation is one row per file).
-    Matches the reference's success/error partition (main.R:153-166).
+    Validation is one row per file, so the passing paths are collected
+    (jobless from a ``validate_files`` frame) and the gate is a filter on
+    that path set: no join.  Matches the reference's success/error
+    partition (main.R:153-166).
     """
-    ok = validation.filter(F.col("status") == "success").select(
-        normalize_path(F.col("source_file_path")).alias("__ok_path")
-    )
-    return (
-        records.withColumn(
-            "__norm_path", normalize_path(F.col("source_file_path"))
-        )
-        .join(
-            F.broadcast(ok),
-            on=F.col("__norm_path") == F.col("__ok_path"),
-            how="left_semi",
-        )
-        .drop("__norm_path")
+    ok = [
+        re.sub(_FILE_SCHEME, "/", r.source_file_path)
+        for r in validation.select("source_file_path", "status").collect()
+        if r.status == "success"
+    ]
+    return records.filter(
+        normalize_path(F.col("source_file_path")).isin(ok)
     )
