@@ -193,6 +193,47 @@ def test_etl_pass_job_count(spark, tmp_path):
     assert m.records_total == corpus.valid_records
 
 
+
+def test_etl_pass_py4j_round_trips(spark, tmp_path, monkeypatch):
+    """A warmed, validated, atomically published pass over a small seeded
+    corpus makes at most 1,500 py4j commands other than the gateway's
+    memory (GC) commands (about 800 today).  Plans built from per-column
+    ``Column`` objects cost about ten round trips per call in PySpark's
+    call-site capture (about 5,000 commands here); SQL text costs one
+    per expression.  The count does not vary from run to run."""
+    import threading
+
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    from perfbench import xml_inputs
+
+    corpus = xml_inputs.generate(
+        str(tmp_path / "input"), 7, 40, 5, invalid_share=0.05, with_xsd=True,
+    )
+
+    def one_pass(out: str) -> None:
+        process_xml_to_parquet(
+            spark, corpus.input_dir, str(tmp_path / out),
+            validate=True, atomic=True,
+        )
+
+    one_pass("warm")
+    sent = [0]
+    lock = threading.Lock()
+    send = ClientServerConnection.send_command
+
+    def counting_send(self, command):
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            with lock:
+                sent[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting_send)
+    one_pass("timed")
+    monkeypatch.undo()
+    assert sent[0] <= 1500, sent[0]
+
 def test_underscore_file_excluded_everywhere(spark, io_dirs):
     """Spark's listing skips ``_*`` names; validation follows the same
     rule, so validation, records and manifest agree on the file set."""

@@ -91,6 +91,28 @@ def test_streaming_xml_exactly_once(spark, tmp_path):
     assert len(by_file["a.xml"]) == 3 and len(by_file["b.xml"]) == 3
 
 
+
+def test_streaming_xml_skips_underscore_file(spark, tmp_path, scratch_made):
+    """The stream's listing skips ``_*`` names, and its schema and
+    document order come from that same file set: a ``_meta.xml`` with
+    another layout (and sorting first) changes neither."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    (inp / "a.xml").write_text(
+        "<?xml version='1.0'?><root>"
+        "<record id='1'><info><b>B1</b><a>A1</a></info></record>"
+        "<record id='2'><info><b>B2</b><a>A2</a></info></record></root>"
+    )
+    (inp / "_meta.xml").write_text(
+        "<?xml version='1.0'?><root><record id='m'>"
+        "<info><a>x</a><b>y</b></info><secret>s</secret></record></root>"
+    )
+    out = stream_xml_dir(spark, str(inp), str(tmp_path / "out"))
+    assert "secret" not in out.columns
+    rows = sorted((r.id, r.info) for r in out.collect())
+    assert rows == [("1", "B1 A1"), ("2", "B2 A2")]
+    _assert_checkpoints_removed(scratch_made, tmp_path)
+
 def test_stream_dedup_drops_duplicates(spark, tmp_path, scratch_made):
     import pandas as pd
 

@@ -17,9 +17,10 @@ flatten → classify → star build → parquet sinks + manifests):
   ENABLE_VALIDATION=TRUE comparison row).
 
 Usage: python tools/bench_xml_etl.py [--files=100] [--keep]
-Prints one JSON line with measured MB/s, the Spark jobs one pass runs
-(constant from pass to pass: the regression signal that wall-time drift
-cannot blur) and the reference-derived floors.
+Prints one JSON line with measured MB/s, the Spark jobs and the py4j
+commands one pass runs (constant from pass to pass: the regression
+signals that wall-time drift cannot blur) and the reference-derived
+floors.
 """
 
 from __future__ import annotations
@@ -101,14 +102,43 @@ def last_job_id(spark) -> int:
     return max(ids, default=-1)
 
 
-def timed_passes(spark, inp: str, out_name: str, validate: bool, n: int):
-    """Fastest of ``n`` passes, and the jobs of the last one."""
+class Py4jCounter:
+    """Counts the py4j commands the driver sends from now on, other than
+    the gateway's memory (GC) commands: the planning work a pass does on
+    the driver, which wall-time drift cannot blur."""
+
+    def __init__(self) -> None:
+        import threading
+
+        from py4j import protocol
+        from py4j.clientserver import ClientServerConnection
+
+        self.count = 0
+        lock = threading.Lock()
+        send = ClientServerConnection.send_command
+
+        def counting_send(conn, command):
+            if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+                with lock:
+                    self.count += 1
+            return send(conn, command)
+
+        ClientServerConnection.send_command = counting_send
+
+
+def timed_passes(
+    spark, inp: str, out_name: str, validate: bool, n: int, py4j: Py4jCounter
+):
+    """Fastest of ``n`` passes, and the jobs and py4j commands of the last
+    one."""
     best = float("inf")
     for _ in range(n):
         j0 = last_job_id(spark)
+        c0 = py4j.count
         best = min(best, run_once(spark, inp, out_name, validate=validate))
+        calls = py4j.count - c0
         jobs = last_job_id(spark) - j0
-    return best, jobs
+    return best, jobs, calls
 
 
 def main() -> None:
@@ -149,9 +179,12 @@ def main() -> None:
     # min-of-3 (same rationale as bench.py: the box shows sporadic
     # multi-second freezes; min measures the engine's steady-state cost)
     trials = int(os.environ.get("XML_ETL_TRIALS", "3"))
-    plain, jobs = timed_passes(spark, inp, "out_plain", False, trials)
-    validated, jobs_validated = timed_passes(
-        spark, inp, "out_validated", True, max(1, trials - 1)
+    py4j = Py4jCounter()
+    plain, jobs, calls = timed_passes(
+        spark, inp, "out_plain", False, trials, py4j
+    )
+    validated, jobs_validated, calls_validated = timed_passes(
+        spark, inp, "out_validated", True, max(1, trials - 1), py4j
     )
 
     # reference README.md:408-410 rows, keyed by file count
@@ -165,8 +198,10 @@ def main() -> None:
         "mb_per_s": round(mb / plain, 2),
         "files_per_s": round(n_files / plain, 2),
         "jobs_per_pass": jobs,
+        "py4j_calls_per_pass": calls,
         "sec_validated": round(validated, 2),
         "jobs_per_pass_validated": jobs_validated,
+        "py4j_calls_per_pass_validated": calls_validated,
         "validation_overhead_pct": round(100 * (validated / plain - 1), 1),
         "reference_sec": ref_sec,
         "reference_validated_sec": ref_val_sec,

@@ -15,7 +15,11 @@ Every per-file intermediate is a value computed once: later consumers
 (validation gate, key attach, manifest counts, error summary) read the
 collected rows, never the files again.  Batching, memory hygiene, and the
 parallel/sequential split are the scheduler's job (SURVEY §3.1 "Spark
-shape").
+shape").  The per-column and per-value plans are built from SQL text
+(``sql_text``), because PySpark's call-site capture makes every
+``Column`` call about ten py4j round trips: a pass over 60 small files
+makes about 1,400 round trips to the JVM, where ``Column`` objects made
+about 8,000.
 """
 
 from __future__ import annotations

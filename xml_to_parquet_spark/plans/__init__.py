@@ -8,6 +8,7 @@ from xml_to_parquet_spark.plans.star_transformer import (
     build_star_schema,
     build_dimension_table,
     dimension_values,
+    value_array,
     aggregate_fact_data,
     validate_star_schema,
 )
@@ -20,6 +21,7 @@ __all__ = [
     "build_star_schema",
     "build_dimension_table",
     "dimension_values",
+    "value_array",
     "aggregate_fact_data",
     "validate_star_schema",
 ]

@@ -19,6 +19,9 @@ Spark-first design (vs the reference's eager per-column loops):
 - the wide 1-row result is melted with ``stack`` and pivoted back per column
   (A4 melt/pivot parity) — this reshape runs on a 1-row dataset, cost ~0
 - ratios are double divisions of exact longs → engine-independent values
+- the aggregate is SQL text in one ``selectExpr``: six ``Column``-object
+  aggregates per column cost about 220 py4j round trips in PySpark's
+  call-site capture, the same six as text about 20 (``sql_text``)
 
 Scale: the count metrics are single-pass map-side-combinable aggregates.
 ``unique_count`` uses exact count_distinct by default — switch
@@ -35,6 +38,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from xml_to_parquet_spark.sql_text import ident, string_literal
+
 NUMERIC_THRESHOLD = 0.8  # reference main.R:13
 DIMENSION_MAX_UNIQUE = 50  # reference schema_analyzer.R:34
 DIMENSION_MAX_UNIQUE_FRAC = 0.10
@@ -46,40 +51,36 @@ _METRICS = ("nonnull", "uniquecnt", "sumlen", "numcnt", "nrows")
 
 def _profile_agg_exprs(
     cols: Sequence[str], approx: bool, sample_k: int
-) -> list:
-    """The one-pass profiling aggregate, shared verbatim by the
-    DataFrame-shaped profile (``profile_columns``) and the driver-side
+) -> list[str]:
+    """The one-pass profiling aggregate as SQL text, shared verbatim by
+    the DataFrame-shaped profile (``profile_columns``) and the driver-side
     fast path (``analyze_schema``) so both compute identical values."""
     aggs = []
     for c in cols:
-        s = F.col(c).cast("string")
+        s = f"CAST({ident(c)} AS STRING)"
+        values = f"collect_set({s})"
         if approx:
-            # 100 TB path: approx distinct + no full value set in memory
-            uniq_expr = F.approx_count_distinct(s).cast("long")
-            samples_expr = F.array_join(
-                F.slice(F.array_sort(F.collect_set(s)), 1, sample_k), "|"
-            )
+            # 100 TB path: approx distinct count
+            uniq = f"CAST(approx_count_distinct({s}) AS BIGINT)"
         else:
             # ONE collect_set per column serves both unique_count and the
-            # sample values. Mixing count_distinct with collect_set makes
-            # Catalyst plan an Expand-based multi-distinct aggregate that
-            # measured ~8x slower — deriving the count from the set avoids
-            # the distinct rewrite entirely (see git history for numbers).
-            values = F.collect_set(s)
-            uniq_expr = F.size(values).cast("long")
-            samples_expr = F.array_join(
-                F.slice(F.array_sort(values), 1, sample_k), "|"
-            )
-        aggs += [
-            F.count(s).alias(f"{c}__nonnull"),
-            uniq_expr.alias(f"{c}__uniquecnt"),
-            F.sum(F.length(s)).alias(f"{c}__sumlen"),
-            F.count(F.when(s.try_cast("double").isNotNull(), 1)).alias(
-                f"{c}__numcnt"
-            ),
-            F.count(F.lit(1)).alias(f"{c}__nrows"),
-            samples_expr.alias(f"{c}__samples"),
-        ]
+            # sample values (Catalyst evaluates the repeated text once).
+            # Mixing count_distinct with collect_set makes Catalyst plan an
+            # Expand-based multi-distinct aggregate that measured ~8x
+            # slower — deriving the count from the set avoids the distinct
+            # rewrite entirely.
+            uniq = f"CAST(size({values}) AS BIGINT)"
+        numeric = f"CASE WHEN try_cast({s} AS DOUBLE) IS NOT NULL THEN 1 END"
+        samples = f"slice(array_sort({values}), 1, {sample_k})"
+        metric = {
+            "nonnull": f"count({s})",
+            "uniquecnt": uniq,
+            "sumlen": f"sum(length({s}))",
+            "numcnt": f"count({numeric})",
+            "nrows": "count(1)",
+            "samples": f"array_join({samples}, '|')",
+        }
+        aggs += [f"{sql} AS {ident(f'{c}__{m}')}" for m, sql in metric.items()]
     return aggs
 
 
@@ -107,15 +108,17 @@ def profile_columns(
         if df.limit(exact_row_cap + 1).count() > exact_row_cap:
             approx = True
 
-    wide = df.agg(*_profile_agg_exprs(cols, approx, sample_k))
+    wide = df.selectExpr(*_profile_agg_exprs(cols, approx, sample_k))
 
     # melt EVERYTHING (counts stringified so samples share the stack) —
     # single derivation chain = the source is scanned exactly once
     pairs = []
     for c in cols:
         for m in _METRICS:
-            pairs += [f"'{c}__{m}'", f"CAST(`{c}__{m}` AS STRING)"]
-        pairs += [f"'{c}__samples'", f"`{c}__samples`"]
+            key = f"{c}__{m}"
+            pairs += [string_literal(key), f"CAST({ident(key)} AS STRING)"]
+        key = f"{c}__samples"
+        pairs += [string_literal(key), ident(key)]
     n_stack = len(cols) * (len(_METRICS) + 1)
     long = wide.select(
         F.expr(f"stack({n_stack}, {', '.join(pairs)}) as (key, value)")
@@ -213,7 +216,9 @@ def analyze_schema(
         if df.limit(exact_row_cap + 1).count() > exact_row_cap:
             approx = True
     sample_k = 3
-    wide = df.agg(*_profile_agg_exprs(cols, approx, sample_k)).collect()[0]
+    wide = df.selectExpr(
+        *_profile_agg_exprs(cols, approx, sample_k)
+    ).collect()[0]
 
     def _div(num, den):
         # try_divide semantics: NULL on zero/NULL denominator

@@ -26,23 +26,30 @@ Scale design:
   brings the sorted values to the driver.  Key = position + 1: the same
   dense, value-ordered keys as ``surrogate_keys``' global row_number, with
   no per-dimension distinct → single-partition window sort.
-- each dimension table is a literal frame over those values; writing it
-  is its only job and never re-reads the input
+- each dimension's values become one literal array; the dimension table
+  is that array ``posexplode``d (key = pos + 1), so writing it is its
+  only job and never re-reads the input
 - the fact gets ``<c>_key`` from a constant-folded map lookup
-  (``try_element_at(map_literal, c)``): no join, no broadcast, no
-  exchange — the fact stays one narrow pass over its input
+  (``try_element_at(map_from_arrays(values, sequence(1, n)), c)``): no
+  join, no broadcast, no exchange — the fact stays one narrow pass over
+  its input
 - measures cast with try_cast (null-on-fail, ANSI-safe) — JVM codegen path
+- the fact is ONE select whose columns are SQL text (``sql_text``), and
+  each value is one ``lit``: a ``Column`` method costs about ten py4j
+  round trips in PySpark's call-site capture, and a ``withColumn`` chain
+  re-analyzes the growing plan at every step
 """
 
 from __future__ import annotations
 
 import uuid
 from dataclasses import dataclass, field
-from itertools import chain
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from xml_to_parquet_spark.sql_text import ident, string_literal
 
 
 @dataclass
@@ -60,57 +67,52 @@ def dimension_values(df: DataFrame, cols: list[str]) -> dict[str, list]:
     """
     if not cols:
         return {}
-    row = df.agg(
-        *[
-            F.array_sort(F.collect_set(F.col(c))).alias(f"_d{i}")
-            for i, c in enumerate(cols)
-        ]
+    row = df.selectExpr(
+        *[f"array_sort(collect_set({ident(c)}))" for c in cols]
     ).first()
     return {c: row[i] for i, c in enumerate(cols)}
 
 
+def value_array(values: list, dtype: T.DataType) -> Column:
+    """A dimension's sorted values as one literal ``array<dtype>``: one
+    ``lit`` per value and a single cast.  It feeds both the dimension
+    table and the fact's key lookup."""
+    return F.array(*[F.lit(v) for v in values]).cast(T.ArrayType(dtype))
+
+
 def build_dimension_table(
-    df: DataFrame, dim_col: str, values: list, include_metadata: bool = True
+    spark: SparkSession,
+    dim_col: str,
+    values: Column,
+    include_metadata: bool = True,
 ) -> DataFrame:
     """Dimension table: (``<col>_key``, value, created_date, is_active).
 
-    ``values`` are the column's sorted distinct values
-    (``dimension_values``); key = position + 1, which equals
-    ``surrogate_keys``' dense sorted row_number (reference semantics,
-    fixed to be batch-independent).  The table is a literal frame: it
-    never re-reads ``df``, whose only role here is the value type.
+    ``values`` is the column's sorted distinct values as a literal array
+    (``value_array`` over ``dimension_values``); key = position + 1,
+    which equals ``surrogate_keys``' dense sorted row_number (reference
+    semantics, fixed to be batch-independent).  The table is a literal
+    frame: it never re-reads the input.
     """
-    key, dtype = f"{dim_col}_key", df.schema[dim_col].dataType
-    row_type = T.ArrayType(
-        T.StructType(
-            [T.StructField(key, T.IntegerType()), T.StructField(dim_col, dtype)]
-        )
-    )
-    rows = F.array(
-        *[
-            F.struct(F.lit(i + 1), F.lit(v).cast(dtype))
-            for i, v in enumerate(values)
-        ]
-    ).cast(row_type)
-    dim = df.sparkSession.range(1, numPartitions=1).select(F.inline(rows))
+    rows = spark.range(1, numPartitions=1).select(F.posexplode(values))
+    # try_add keeps the key nullable (an optional Parquet column), as a
+    # surrogate key from a join is; pos + 1 would be declared non-null
+    key = ident(f"{dim_col}_key")
+    cols = [f"try_add(pos, 1) AS {key}", f"col AS {ident(dim_col)}"]
     if include_metadata:
-        dim = dim.withColumn("created_date", F.current_date()).withColumn(
-            "is_active", F.lit(True)
-        )
-    return dim
+        cols += ["current_date() AS created_date", "true AS is_active"]
+    return rows.selectExpr(*cols)
 
 
-def _key_lookup(dim_col: str, dtype: T.DataType, values: list) -> F.Column:
-    """``<col>_key`` for each row: a constant-folded map literal looked up
-    by value; null for a null value (the left join's no-match)."""
-    if not values:
-        return F.lit(None).cast(T.IntegerType())
-    keys = F.create_map(
-        *chain.from_iterable(
-            (F.lit(v).cast(dtype), F.lit(i + 1)) for i, v in enumerate(values)
-        )
-    )
-    return F.try_element_at(keys, F.col(dim_col))
+def _key_lookup(dim_col: str, values: Column, n: int) -> Column:
+    """``<col>_key`` for each row: a constant-folded map from the ``n``
+    values to their positions, looked up by value; null for a null value
+    (the left join's no-match)."""
+    key = f"{dim_col}_key"
+    if not n:
+        return F.expr(f"CAST(NULL AS INT) AS {ident(key)}")
+    keys = F.map_from_arrays(values, F.sequence(F.lit(1), F.lit(n)))
+    return F.try_element_at(keys, ident(dim_col)).alias(key)
 
 
 def build_star_schema(
@@ -125,58 +127,61 @@ def build_star_schema(
     ``catalog`` is ``analyze_schema`` output ({col: {classification, ...}}).
     Runs one job, the dimension-value aggregate; the fact and dimension
     frames it returns execute only when the caller writes/collects them.
+    The fact is one select: identifiers, measures, audit columns, the
+    default count measure when there are no measures, the dimension keys
+    and the load metadata, in that order.
     """
+    schema = df.schema
     by_cls: dict[str, list[str]] = {}
     for col, info in catalog.items():
-        if col in df.columns:
+        if col in schema.names:
             by_cls.setdefault(info["classification"], []).append(col)
 
     identifiers = by_cls.get("identifier", [])
     measures = by_cls.get("measure", [])
     dims = by_cls.get("dimension", [])
-    audits = [c for c in by_cls.get("audit", []) if c in df.columns]
+    audits = by_cls.get("audit", [])
 
-    if id_column and id_column in df.columns:
+    if id_column and id_column in schema.names:
         identifiers = [id_column] + [c for c in identifiers if c != id_column]
+    head = [ident(c) for c in identifiers]
     if not identifiers:
         # reference fallback seq_len (star_transformer.R:27-30); the scalable
         # equivalent is a partition-local monotonic id (no global sort)
-        df = df.withColumn("record_id", F.monotonically_increasing_id())
-        identifiers = ["record_id"]
+        head = ["monotonically_increasing_id() AS record_id"]
 
     values = dimension_values(df, dims)
-    dimensions = {c: build_dimension_table(df, c, values[c]) for c in dims}
+    arrays = {c: value_array(values[c], schema[c].dataType) for c in dims}
+    dimensions = {
+        c: build_dimension_table(df.sparkSession, c, arrays[c]) for c in dims
+    }
 
-    fact_cols = identifiers + measures + dims + audits
-    fact = df.select(*fact_cols)
     # numeric coercion, null-on-fail (as.numeric parity, ANSI-safe).
     # r12: a measure that is ALREADY numeric keeps its type — an
     # XSD-typed decimal/bigint (sources.xml_source.apply_xsd_types)
     # must not be silently widened back to double
     for m in measures:
-        if not isinstance(fact.schema[m].dataType, T.NumericType):
-            fact = fact.withColumn(m, F.col(m).try_cast("double"))
+        if isinstance(schema[m].dataType, T.NumericType):
+            head.append(ident(m))
+        else:
+            head.append(f"try_cast({ident(m)} AS DOUBLE) AS {ident(m)}")
+    head += [ident(c) for c in audits]
     if not measures:
         # default count measure (reference A6, star_transformer.R:82-86)
-        fact = fact.withColumn("record_count", F.lit(1))
-
-    # attach surrogate keys by map lookup on the dim value columns
-    fact = fact.select(
-        "*",
-        *[
-            _key_lookup(c, df.schema[c].dataType, values[c]).alias(f"{c}_key")
-            for c in dims
-        ],
-    )
-    # drop the dimension value columns from the fact (reference P2)
-    fact = fact.drop(*dims)
-
+        head.append("1 AS record_count")
+    # surrogate keys by map lookup on the dimension values, which the
+    # fact itself does not carry (reference P2)
+    keys = [_key_lookup(c, arrays[c], len(values[c])) for c in dims]
+    tail = []
     if include_audit:
-        fact = (
-            fact.withColumn("load_date", F.current_date())
-            .withColumn("load_time", F.date_format(F.current_timestamp(), "HH:mm:ss"))
-            .withColumn("batch_id", F.lit(batch_id or uuid.uuid4().hex))
-        )
+        tail = [
+            "current_date() AS load_date",
+            "date_format(current_timestamp(), 'HH:mm:ss') AS load_time",
+            f"{string_literal(batch_id or uuid.uuid4().hex)} AS batch_id",
+        ]
+    fact = df.select(
+        *[F.expr(sql) for sql in head], *keys, *[F.expr(sql) for sql in tail]
+    )
     return StarSchema(fact=fact, dimensions=dimensions)
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xml_to_parquet_spark.plans.star_transformer import StarSchema
+from xml_to_parquet_spark.sql_text import string_literal
 
 
 def write_parquet(
@@ -211,21 +212,18 @@ def processing_manifest(
     One aggregate over the records; the validation counts come from its
     one-row-per-file rows (jobless from a ``validate_files`` frame) as
     literals."""
-    agg = records.agg(
-        F.count_distinct("source_file_path").alias("files_processed"),
-        F.count(F.lit(1)).alias("records_total"),
-    )
+    cols = [
+        "count(DISTINCT source_file_path) AS files_processed",
+        "count(1) AS records_total",
+    ]
     if validation is not None:
         status = [r.status for r in validation.select("status").collect()]
-        agg = agg.select(
-            "*",
-            F.lit(len(status)).cast("long").alias("files_validated"),
-            F.lit(status.count("success")).cast("long").alias("files_valid"),
-        )
-    return agg.withColumn(
-        "run_timestamp",
-        F.lit(datetime.now(timezone.utc).isoformat()),
-    )
+        cols += [
+            f"CAST({len(status)} AS BIGINT) AS files_validated",
+            f"CAST({status.count('success')} AS BIGINT) AS files_valid",
+        ]
+    run_at = string_literal(datetime.now(timezone.utc).isoformat())
+    return records.selectExpr(*cols, f"{run_at} AS run_timestamp")
 
 
 def compact_parquet(

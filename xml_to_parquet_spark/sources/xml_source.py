@@ -29,6 +29,11 @@ Scale notes: one Spark job reads every file in the directory glob
 (parallelism = files × codec splits); the flatten pass is pure column
 expressions (whole-stage codegen, no Python); the business-key pass reads
 each file once more but produces one row per file, collected once.
+The flatten, lineage and key-attach projections are SQL text, one
+``selectExpr`` each (nested field access, one lambda variable per array
+depth, ``try_element_at`` per occurrence): a ``Column`` method costs
+about ten py4j round trips in PySpark's call-site capture, and a wide
+nested record would need hundreds of them.
 A directory is read with ``pathGlobFilter`` rather than as a glob: Spark
 lists one root path on the driver, where a glob expands to one root per
 file (listed by a Spark job past ``parallelPartitionDiscovery.threshold``)
@@ -46,6 +51,12 @@ from fnmatch import fnmatchcase
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from xml_to_parquet_spark.sql_text import (
+    ident,
+    string_literal,
+    with_sql_columns,
+)
 
 CANDIDATE_ROW_TAGS = ("record", "Record", "item", "Item")
 XML_FILE_GLOB = "*.xml"
@@ -183,7 +194,9 @@ def probe_first_file(
     return _PROBE_CACHE[key]
 
 
-def resolve_row_tag(spark: SparkSession, path: str) -> str | None:
+def resolve_row_tag(
+    spark: SparkSession, path: str | list[str]
+) -> str | None:
     """Resolve the rowTag from the cached probe read.
 
     Picks the first ``CANDIDATE_ROW_TAGS`` member that appears as an
@@ -213,7 +226,7 @@ def _local_name(tag: str) -> str:
 
 
 def derive_document_order(
-    spark: SparkSession, path: str, row_tag: str
+    spark: SparkSession, path: str | list[str], row_tag: str
 ) -> dict[tuple[str, ...], list[str]]:
     """Element document order per nested path, from the cached probe file.
 
@@ -342,46 +355,56 @@ def _ordered_fields(
     return head + [f for f in dtype.fields if f.name not in seen]
 
 
-def _leaf_text_exprs(
-    col: F.Column,
+def _leaf_text_sql(
+    ref: str,
     dtype: T.DataType,
     doc_order: dict[tuple[str, ...], list[str]] | None = None,
     path: tuple[str, ...] = (),
-) -> list[F.Column]:
-    """All descendant leaf-text values of a parsed XML value — in DOCUMENT
-    order when ``doc_order`` (from ``derive_document_order``) is given,
-    else in the inferred schema's field order.
+    depth: int = 0,
+) -> list[str]:
+    """SQL text of all descendant leaf-text values of the parsed XML value
+    at ``ref`` — in DOCUMENT order when ``doc_order`` (from
+    ``derive_document_order``) is given, else in the inferred schema's
+    field order.
 
     Mirrors xml2::xml_text over grandchildren: element text yes (including
-    ``_VALUE`` of mixed-content elements), attributes no.
+    ``_VALUE`` of mixed-content elements), attributes no.  Each array
+    nesting level binds its own lambda variable (``x0``, ``x1``, ...), and
+    lambda bodies reference nothing else, so a column named ``x0`` is
+    never shadowed.
     """
     if isinstance(dtype, T.StructType):
-        out: list[F.Column] = []
+        out: list[str] = []
         for f in _ordered_fields(dtype, doc_order, path):
             if f.name.startswith(ATTR_PREFIX) and f.name != VALUE_TAG:
                 continue  # attribute of a nested element — not text content
             out.extend(
-                _leaf_text_exprs(
-                    col.getField(f.name), f.dataType,
-                    doc_order, path + (f.name,),
+                _leaf_text_sql(
+                    f"{ref}.{ident(f.name)}", f.dataType,
+                    doc_order, path + (f.name,), depth,
                 )
             )
         return out
     if isinstance(dtype, T.ArrayType):
         # repeated nested tags: join each element's text; array_join skips
         # nulls. Element leaves are flattened via transform into strings.
-        elem = dtype.elementType
+        x, elem = f"x{depth}", dtype.elementType
         if isinstance(elem, (T.StructType, T.ArrayType)):
-            mapped = F.transform(
-                col,
-                lambda x: F.concat_ws(
-                    " ", *_leaf_text_exprs(x, elem, doc_order, path)
-                ),
-            )
+            leaves = _leaf_text_sql(x, elem, doc_order, path, depth + 1)
+            body = _concat_sql(leaves)
         else:
-            mapped = F.transform(col, lambda x: F.trim(x.cast("string")))
-        return [F.array_join(mapped, " ")]
-    return [F.trim(col.cast("string"))]
+            body = _trim_sql(x)
+        return [f"array_join(transform({ref}, {x} -> {body}), ' ')"]
+    return [_trim_sql(ref)]
+
+
+def _trim_sql(ref: str) -> str:
+    return f"trim(CAST({ref} AS STRING))"
+
+
+def _concat_sql(parts: list[str]) -> str:
+    """Space-joined ``parts``; ``concat_ws`` skips nulls."""
+    return "concat_ws(" + ", ".join(["' '", *parts]) + ")"
 
 
 def _make_unique(names: list[str]) -> list[str]:
@@ -423,70 +446,70 @@ def flatten_records(
         f for f in df.schema.fields if isinstance(f.dataType, T.ArrayType)
     ]
     if arrays and max_repeat is None:
-        maxes = df.agg(
-            *[F.max(F.size(F.col(f.name))).alias(f.name) for f in arrays]
-        ).collect()[0]
-        repeat_of = {f.name: maxes[f.name] or 0 for f in arrays}
+        maxes = df.selectExpr(
+            *[f"max(size({ident(f.name)}))" for f in arrays]
+        ).first()
+        repeat_of = {f.name: m or 0 for f, m in zip(arrays, maxes)}
     else:
         repeat_of = {f.name: (max_repeat or 1) for f in arrays}
 
-    cols: list[F.Column] = []
+    exprs: list[str] = []
     names: list[str] = []
     for f in df.schema.fields:
-        col, dt = F.col(f.name), f.dataType
+        ref, dt = ident(f.name), f.dataType
         if f.name == "_corrupt_record":
             # PERMISSIVE-mode parse-error channel; excluded from the tabular
             # output (error files are handled by the validation gate — the
             # reference's status-envelope equivalent, xml_parser.R:348-359)
             continue
         if f.name == VALUE_TAG:
-            cols.append(F.trim(col.cast("string")))
+            exprs.append(_trim_sql(ref))
             names.append("text_content")
         elif f.name.startswith(ATTR_PREFIX):
-            cols.append(F.trim(col.cast("string")))
+            exprs.append(_trim_sql(ref))
             names.append(f.name[len(ATTR_PREFIX):])
         elif isinstance(dt, T.ArrayType):
             elem = dt.elementType
             for i in range(repeat_of[f.name]):
                 # try_element_at: records with fewer occurrences → null
-                item = F.try_element_at(col, F.lit(i + 1))
+                item = f"try_element_at({ref}, {i + 1})"
                 if isinstance(elem, T.StructType):
-                    cols.append(
-                        F.concat_ws(
-                            " ",
-                            *_leaf_text_exprs(
-                                item, elem, doc_order, (f.name,)
-                            ),
+                    exprs.append(
+                        _concat_sql(
+                            _leaf_text_sql(item, elem, doc_order, (f.name,))
                         )
                     )
                 else:
-                    cols.append(F.trim(item.cast("string")))
+                    exprs.append(_trim_sql(item))
                 names.append(f.name)
         elif isinstance(dt, T.StructType):
-            cols.append(
-                F.concat_ws(
-                    " ", *_leaf_text_exprs(col, dt, doc_order, (f.name,))
-                )
+            exprs.append(
+                _concat_sql(_leaf_text_sql(ref, dt, doc_order, (f.name,)))
             )
             names.append(f.name)
         else:
-            cols.append(F.trim(col.cast("string")))
+            exprs.append(_trim_sql(ref))
             names.append(f.name)
 
     names = _make_unique(names)
-    return df.select(*[c.alias(n) for c, n in zip(cols, names)])
+    return df.selectExpr(
+        *[f"{sql} AS {ident(n)}" for sql, n in zip(exprs, names)]
+    )
 
 
 def add_lineage(df: DataFrame) -> DataFrame:
     """Audit columns (reference xml_parser.R:332-335): source_file_name,
     source_file_path, load_timestamp."""
-    path = F.input_file_name()
-    return (
-        df.withColumn("source_file_path", path)
-        .withColumn(
-            "source_file_name", F.regexp_extract(path, r"([^/]+)$", 1)
-        )
-        .withColumn("load_timestamp", F.current_timestamp())
+    base_name = string_literal(r"([^/]+)$")
+    return with_sql_columns(
+        df,
+        {
+            "source_file_path": "input_file_name()",
+            "source_file_name": (
+                f"regexp_extract(input_file_name(), {base_name}, 1)"
+            ),
+            "load_timestamp": "current_timestamp()",
+        },
     )
 
 
@@ -494,10 +517,10 @@ def with_record_id(df: DataFrame, id_attribute: str = "id") -> DataFrame:
     """record_id = the id attribute when present, else a generated id
     (reference xml_parser.R:137-143; generation is partition-local)."""
     if id_attribute in df.columns:
-        return df.withColumn("record_id", F.col(id_attribute))
-    return df.withColumn(
-        "record_id", F.monotonically_increasing_id().cast("string")
-    )
+        record_id = ident(id_attribute)
+    else:
+        record_id = "CAST(monotonically_increasing_id() AS STRING)"
+    return with_sql_columns(df, {"record_id": record_id})
 
 
 class _ElemSpec:
@@ -746,24 +769,21 @@ def extract_business_keys(
     """
     from xml_to_parquet_spark.session import local_frame
 
-    raw = spark.read.options(**options).text(path, wholetext=True).select(
-        F.input_file_name().alias("source_file_path"),
-        F.col("value"),
-    )
-    first_comment = F.trim(
-        F.regexp_extract(F.col("value"), r"<!--([\s\S]*?)-->", 1)
-    )
+    comment = string_literal(r"<!--([\s\S]*?)-->")
+    first_comment = f"trim(regexp_extract(value, {comment}, 1))"
     # translate the anchored comment pattern into capture extractions
-    inner = pattern.strip("^$")
-    name_ = F.regexp_extract(first_comment, f"^{inner}$", 1)
-    value_ = F.regexp_extract(first_comment, f"^{inner}$", 2)
+    anchored = string_literal(f"^{pattern.strip('^$')}$")
     rows = (
-        raw.select(
-            "source_file_path",
-            name_.alias("business_key_name"),
-            value_.alias("business_key_value"),
+        spark.read.options(**options)
+        .text(path, wholetext=True)
+        .selectExpr(
+            "input_file_name() AS source_file_path",
+            f"regexp_extract({first_comment}, {anchored}, 1)"
+            " AS business_key_name",
+            f"regexp_extract({first_comment}, {anchored}, 2)"
+            " AS business_key_value",
         )
-        .filter(F.col("business_key_name") != "")
+        .filter("business_key_name != ''")
         .collect()
     )
     return local_frame(spark, rows, BUSINESS_KEY_SCHEMA)
@@ -794,21 +814,15 @@ def attach_business_keys(
         # ONE select with every key column, not a withColumn loop: each
         # withColumn adds an analyzer/optimizer pass over a growing plan,
         # which goes quadratic when a feed carries thousands of distinct
-        # key names. withColumn's REPLACE semantics are preserved: a key
-        # named like an existing column overwrites it in place instead of
-        # creating an ambiguous duplicate.
-        key_exprs = {
-            kn: F.when(
-                F.col("business_key_name") == kn,
-                F.col("business_key_value"),
-            ).alias(kn)
-            for kn in key_names
-        }
-        cols = [
-            key_exprs.pop(c) if c in key_exprs else F.col(c)
-            for c in out.columns
-        ]
-        out = out.select(*cols, *key_exprs.values())
+        # key names. A key named like an existing column replaces it.
+        out = with_sql_columns(
+            out,
+            {
+                kn: f"CASE WHEN business_key_name = {string_literal(kn)}"
+                " THEN business_key_value END"
+                for kn in key_names
+            },
+        )
     return out
 
 
@@ -825,11 +839,15 @@ def apply_xsd_types(df: DataFrame, schema_path: str) -> DataFrame:
     declared (or unambiguous) simple type stay strings."""
     from xml_to_parquet_spark.validation.xsd_subset import xsd_leaf_types
 
-    types = xsd_leaf_types(schema_path)
-    for name, ddl in types.items():
-        if name in df.columns:
-            df = df.withColumn(name, F.col(name).try_cast(ddl))
-    return df
+    cols = set(df.columns)
+    return with_sql_columns(
+        df,
+        {
+            name: f"try_cast({ident(name)} AS {ddl})"
+            for name, ddl in xsd_leaf_types(schema_path).items()
+            if name in cols
+        },
+    )
 
 
 def read_xml_split(

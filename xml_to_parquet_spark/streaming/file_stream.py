@@ -804,19 +804,23 @@ def stream_xml_dir(
     is left in place for the next run; without one, the run uses a
     scratch checkpoint that is removed on return.
     """
-    import glob
-
     from xml_to_parquet_spark.sources.xml_source import (
+        ATTR_PREFIX,
+        VALUE_TAG,
+        XML_FILE_GLOB,
         add_lineage,
         derive_document_order,
         flatten_records,
+        list_xml_files,
         read_xml_auto,
         with_record_id,
     )
 
     # the file list, not a glob path: Spark probes a glob path for a
-    # sink metadata dir and logs a FileNotFoundException trace
-    files = sorted(glob.glob(os.path.join(input_dir, "*.xml")))
+    # sink metadata dir and logs a FileNotFoundException trace.  It is
+    # the set the stream's listing reads, so a ``_*.xml`` file shapes
+    # neither the schema nor the document order.
+    files = list_xml_files(input_dir)
     if not files:
         raise FileNotFoundError(f"no XML files under {input_dir}")
     batch = read_xml_auto(spark, files, row_tag)
@@ -825,10 +829,10 @@ def stream_xml_dir(
         spark.readStream.format("xml")
         .schema(batch.schema)
         .option("rowTag", row_tag)
-        .option("attributePrefix", "_")
-        .option("valueTag", "_VALUE")
+        .option("attributePrefix", ATTR_PREFIX)
+        .option("valueTag", VALUE_TAG)
         .option("ignoreSurroundingSpaces", "true")
-        .option("pathGlobFilter", "*.xml")
+        .option("pathGlobFilter", XML_FILE_GLOB)
         .load(input_dir)
     )
     out = add_lineage(

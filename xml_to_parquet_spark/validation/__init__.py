@@ -3,7 +3,6 @@ from xml_to_parquet_spark.validation.xml_validation import (
     well_formed_check,
     discover_schema_file,
     gate_valid,
-    normalize_path,
     HAS_LXML,
 )
 
@@ -12,6 +11,5 @@ __all__ = [
     "well_formed_check",
     "discover_schema_file",
     "gate_valid",
-    "normalize_path",
     "HAS_LXML",
 ]

@@ -41,8 +41,9 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from xml_to_parquet_spark.sql_text import string_literal
 
 try:  # import-gated: not in this container; real on a full cluster image
     from lxml import etree as _lxml_etree  # type: ignore
@@ -293,25 +294,24 @@ def validate_files(
 _FILE_SCHEME = r"^file:/+"
 
 
-def normalize_path(col: F.Column) -> F.Column:
-    """Strip the ``file:`` scheme input_file_name() adds, so validation
-    paths (plain) and lineage paths (URI) compare correctly."""
-    return F.regexp_replace(col, _FILE_SCHEME, "/")
-
-
 def gate_valid(records: DataFrame, validation: DataFrame) -> DataFrame:
     """Keep only records from files whose validation status is success.
 
     Validation is one row per file, so the passing paths are collected
     (jobless from a ``validate_files`` frame) and the gate is a filter on
     that path set: no join.  Matches the reference's success/error
-    partition (main.R:153-166).
+    partition (main.R:153-166).  The lineage path's ``file:`` scheme is
+    stripped before the comparison, since validation paths are plain.
     """
     ok = [
         re.sub(_FILE_SCHEME, "/", r.source_file_path)
         for r in validation.select("source_file_path", "status").collect()
         if r.status == "success"
     ]
+    if not ok:
+        return records.filter("false")
+    scheme = string_literal(_FILE_SCHEME)
+    paths = ", ".join(map(string_literal, ok))
     return records.filter(
-        normalize_path(F.col("source_file_path")).isin(ok)
+        f"regexp_replace(source_file_path, {scheme}, '/') IN ({paths})"
     )

@@ -1697,6 +1697,7 @@ def q_xsd_typed_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver's schema check asserts the typed output schema."""
     from xml_to_parquet_spark.plans.star_transformer import build_star_schema
     from xml_to_parquet_spark.sources.xml_source import (
+        XML_FILE_GLOB,
         apply_xsd_types,
         read_xml_records,
     )
@@ -1708,7 +1709,9 @@ def q_xsd_typed_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     with open(xsd_path, "w") as fh:
         fh.write(_TYPED_XSD)
     records = apply_xsd_types(
-        read_xml_records(spark, os.path.join(d, "*.xml"), lineage=False),
+        read_xml_records(
+            spark, d, lineage=False, pathGlobFilter=XML_FILE_GLOB
+        ),
         xsd_path,
     )
     catalog = {
@@ -1764,12 +1767,17 @@ ORDER BY record_id
 
 def q_xml_star_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xml_to_parquet_spark.plans.star_transformer import build_star_schema
-    from xml_to_parquet_spark.sources.xml_source import read_xml_records
+    from xml_to_parquet_spark.sources.xml_source import (
+        XML_FILE_GLOB,
+        read_xml_records,
+    )
 
     d = process_scratch_dir("xml_golden_")
     with open(os.path.join(d, "products.xml"), "w") as fh:
         fh.write(_GOLDEN_XML)
-    records = read_xml_records(spark, os.path.join(d, "*.xml"), lineage=False)
+    records = read_xml_records(
+        spark, d, lineage=False, pathGlobFilter=XML_FILE_GLOB
+    )
     catalog = {
         "record_id": {"classification": "identifier"},
         "category": {"classification": "dimension"},
@@ -1831,6 +1839,7 @@ def q_business_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     xml_parser.R:227-261, main.R:229-237) — whole-file pass + broadcast
     join, each key name also pivoted to its own column."""
     from xml_to_parquet_spark.sources.xml_source import (
+        XML_FILE_GLOB,
         attach_business_keys,
         extract_business_keys,
         read_xml_records,
@@ -1840,9 +1849,9 @@ def q_business_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     for fname, body in (("a.xml", _BK_XML_A), ("b.xml", _BK_XML_B)):
         with open(os.path.join(d, fname), "w") as fh:
             fh.write(body)
-    glob_path = os.path.join(d, "*.xml")
-    records = read_xml_records(spark, glob_path, row_tag="record")
-    keys = extract_business_keys(spark, glob_path)
+    xml_only = {"pathGlobFilter": XML_FILE_GLOB}
+    records = read_xml_records(spark, d, row_tag="record", **xml_only)
+    keys = extract_business_keys(spark, d, **xml_only)
     out = attach_business_keys(records, keys, key_names=["OrderType", "Region"])
     return out.select(
         "record_id",
@@ -1916,9 +1925,11 @@ def q_validation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     three validator branches in-container: well-formedness (bad.xml),
     internal DTD valid (dtd_good.xml), internal DTD invalid but
     well-formed (dtd_bad.xml — only DTD validation can reject it)."""
-    import glob as _glob
-
-    from xml_to_parquet_spark.sources.xml_source import read_xml_records
+    from xml_to_parquet_spark.sources.xml_source import (
+        XML_FILE_GLOB,
+        list_xml_files,
+        read_xml_records,
+    )
     from xml_to_parquet_spark.validation.xml_validation import (
         gate_valid,
         validate_files,
@@ -1934,8 +1945,10 @@ def q_validation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     for fname, body in files:
         with open(os.path.join(d, fname), "w") as fh:
             fh.write(body)
-    records = read_xml_records(spark, os.path.join(d, "*.xml"), row_tag="record")
-    val = validate_files(spark, sorted(_glob.glob(os.path.join(d, "*.xml"))))
+    records = read_xml_records(
+        spark, d, row_tag="record", pathGlobFilter=XML_FILE_GLOB
+    )
+    val = validate_files(spark, list_xml_files(d))
     return (
         gate_valid(records, val)
         .select("record_id", "name")
@@ -1955,12 +1968,17 @@ def q_default_count_measure(spark: SparkSession, sf_dir: str) -> DataFrame:
     default ``record_count = 1`` measure (reference
     star_transformer.R:82-86)."""
     from xml_to_parquet_spark.plans.star_transformer import build_star_schema
-    from xml_to_parquet_spark.sources.xml_source import read_xml_records
+    from xml_to_parquet_spark.sources.xml_source import (
+        XML_FILE_GLOB,
+        read_xml_records,
+    )
 
     d = process_scratch_dir("xml_a6_")
     with open(os.path.join(d, "products.xml"), "w") as fh:
         fh.write(_GOLDEN_XML)
-    records = read_xml_records(spark, os.path.join(d, "*.xml"), lineage=False)
+    records = read_xml_records(
+        spark, d, lineage=False, pathGlobFilter=XML_FILE_GLOB
+    )
     catalog = {
         "record_id": {"classification": "identifier"},
         "category": {"classification": "dimension"},
@@ -2003,13 +2021,18 @@ def q_generated_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global sort). The ids themselves are partitioning-dependent, so the
     oracle checks the invariants: one non-null UNIQUE id per row, across
     files."""
-    from xml_to_parquet_spark.sources.xml_source import read_xml_records
+    from xml_to_parquet_spark.sources.xml_source import (
+        XML_FILE_GLOB,
+        read_xml_records,
+    )
 
     d = process_scratch_dir("xml_f13_")
     for fname, body in (("a.xml", _NOID_XML_A), ("b.xml", _NOID_XML_B)):
         with open(os.path.join(d, fname), "w") as fh:
             fh.write(body)
-    records = read_xml_records(spark, os.path.join(d, "*.xml"), row_tag="record")
+    records = read_xml_records(
+        spark, d, row_tag="record", pathGlobFilter=XML_FILE_GLOB
+    )
     return records.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count("record_id").alias("n_nonnull_ids"),
@@ -2035,13 +2058,17 @@ def q_make_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F14: repeated sibling tags flatten to ``name, name.1, ...`` columns
     (R make.unique parity, reference xml_parser.R:193-199); records with
     fewer occurrences get nulls."""
-    from xml_to_parquet_spark.sources.xml_source import read_xml_records
+    from xml_to_parquet_spark.sources.xml_source import (
+        XML_FILE_GLOB,
+        read_xml_records,
+    )
 
     d = process_scratch_dir("xml_f14_")
     with open(os.path.join(d, "lib.xml"), "w") as fh:
         fh.write(_REPEAT_XML)
     records = read_xml_records(
-        spark, os.path.join(d, "*.xml"), row_tag="record", lineage=False
+        spark, d, row_tag="record", lineage=False,
+        pathGlobFilter=XML_FILE_GLOB,
     )
     return records.select(
         "record_id", "tag", F.col("`tag.1`"), "author"
@@ -2060,9 +2087,8 @@ ORDER BY record_id
 def q_report_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F15/A5: processing-report rate math from Spark-side counts
     (reference logger.R:94-130) — 3 valid files + 1 malformed → 0.75."""
-    import glob as _glob
-
     from xml_to_parquet_spark.logging_utils import validation_summary
+    from xml_to_parquet_spark.sources.xml_source import list_xml_files
     from xml_to_parquet_spark.validation.xml_validation import validate_files
 
     d = process_scratch_dir("xml_f15_")
@@ -2071,7 +2097,7 @@ def q_report_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write(_VAL_GOOD_XML)
     with open(os.path.join(d, "bad.xml"), "w") as fh:
         fh.write(_VAL_BAD_XML)
-    val = validate_files(spark, sorted(_glob.glob(os.path.join(d, "*.xml"))))
+    val = validate_files(spark, list_xml_files(d))
     return validation_summary(val)
 
 
