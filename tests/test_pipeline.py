@@ -168,7 +168,7 @@ def _jobs_since(spark, floor: int) -> list:
 
 def test_etl_pass_job_count(spark, tmp_path):
     """One validated, atomically published pass over a small seeded
-    corpus runs at most 20 Spark jobs, and none of them has one task per
+    corpus runs at most 14 Spark jobs, and none of them has one task per
     input file (a per-path listing job or a per-file re-read).  Job
     counts do not vary from run to run, so this pins the pass's shape."""
     from perfbench import xml_inputs
@@ -184,7 +184,7 @@ def test_etl_pass_job_count(spark, tmp_path):
         validate=True, atomic=True,
     )
     jobs = _jobs_since(spark, floor)
-    assert len(jobs) <= 20, len(jobs)
+    assert len(jobs) <= 14, len(jobs)
     assert all(j.numTasks() != n_files for j in jobs), [
         j.numTasks() for j in jobs
     ]

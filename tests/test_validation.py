@@ -41,6 +41,16 @@ def _write(d, name, body):
     return p
 
 
+def _read(path):
+    with open(path, "rb") as fh:
+        return fh.read()
+
+
+def _check(path, schema_file):
+    """``_check_one`` over the file's bytes, as the input scan calls it."""
+    return _check_one(path, _read(path), schema_file)
+
+
 def test_find_schema_file_order(tmp_path):
     d = str(tmp_path / "xml")
     s = str(tmp_path / "schemas")
@@ -71,8 +81,8 @@ def test_discover_prefers_xsd_over_dtd(tmp_path):
 
 def test_has_internal_dtd(tmp_path):
     d = str(tmp_path)
-    assert has_internal_dtd(_write(d, "d.xml", DTD_DOC_VALID))
-    assert not has_internal_dtd(_write(d, "p.xml", GOOD))
+    assert has_internal_dtd(_read(_write(d, "d.xml", DTD_DOC_VALID)))
+    assert not has_internal_dtd(_read(_write(d, "p.xml", GOOD)))
 
 
 def test_well_formedness_fallback(tmp_path):
@@ -86,8 +96,8 @@ def test_internal_dtd_validation_lxml(tmp_path):
     d = str(tmp_path)
     ok = _write(d, "ok.xml", DTD_DOC_VALID)
     nok = _write(d, "nok.xml", DTD_DOC_INVALID)
-    assert _check_one(ok, None) == ("success", "")
-    status, err = _check_one(nok, None)
+    assert _check(ok, None) == ("success", "")
+    status, err = _check(nok, None)
     assert status == "validation_error" and err
 
 
@@ -97,8 +107,8 @@ def test_external_dtd_validation_lxml(tmp_path):
     dtd = _write(d, "note.dtd", "<!ELEMENT note (to)><!ELEMENT to (#PCDATA)>")
     ok = _write(d, "ok.xml", "<note><to>x</to></note>")
     nok = _write(d, "nok.xml", "<note><wrong>x</wrong></note>")
-    assert _check_one(ok, dtd) == ("success", "")
-    status, err = _check_one(nok, dtd)
+    assert _check(ok, dtd) == ("success", "")
+    status, err = _check(nok, dtd)
     assert status == "validation_error" and err
 
 
@@ -145,7 +155,7 @@ def test_xsd_validation_valid_runs_here(tmp_path):
     d = str(tmp_path)
     xsd = _write(d, "items.xsd", ITEMS_XSD)
     ok = _write(d, "ok.xml", ITEMS_OK)
-    assert _check_one(ok, xsd) == ("success", "")
+    assert _check(ok, xsd) == ("success", "")
 
 
 @pytest.mark.parametrize(
@@ -183,7 +193,7 @@ def test_xsd_validation_invalid_runs_here(tmp_path, doc, expect_in_err):
     d = str(tmp_path)
     xsd = _write(d, "items.xsd", ITEMS_XSD)
     nok = _write(d, "nok.xml", doc)
-    status, err = _check_one(nok, xsd)
+    status, err = _check(nok, xsd)
     assert status == "validation_error", (status, err)
     assert expect_in_err in err
 
@@ -192,7 +202,7 @@ def test_xsd_malformed_doc_is_error_not_validation_error(tmp_path):
     d = str(tmp_path)
     xsd = _write(d, "items.xsd", ITEMS_XSD)
     bad = _write(d, "bad.xml", "<items><item sku='s'>")
-    status, err = _check_one(bad, xsd)
+    status, err = _check(bad, xsd)
     assert status == "error" and err
 
 
@@ -227,8 +237,8 @@ def test_internal_dtd_validation_runs_here(tmp_path):
     d = str(tmp_path)
     ok = _write(d, "ok.xml", DTD_DOC_VALID)
     nok = _write(d, "nok.xml", DTD_DOC_INVALID)
-    assert _check_one(ok, None) == ("success", "")
-    status, err = _check_one(nok, None)
+    assert _check(ok, None) == ("success", "")
+    status, err = _check(nok, None)
     assert status == "validation_error"
     assert "wrong" in err or "model" in err
 
@@ -238,8 +248,8 @@ def test_external_dtd_validation_runs_here(tmp_path):
     dtd = _write(d, "note.dtd", "<!ELEMENT note (to)><!ELEMENT to (#PCDATA)>")
     ok = _write(d, "ok.xml", "<note><to>x</to></note>")
     nok = _write(d, "nok.xml", "<note><wrong>x</wrong></note>")
-    assert _check_one(ok, dtd) == ("success", "")
-    status, err = _check_one(nok, dtd)
+    assert _check(ok, dtd) == ("success", "")
+    status, err = _check(nok, dtd)
     assert status == "validation_error" and err
 
 
@@ -248,7 +258,7 @@ def test_doctype_system_id_resolved_relative_to_document(tmp_path):
     _write(d, "note.dtd", "<!ELEMENT note (to)><!ELEMENT to (#PCDATA)>")
     doc = '<!DOCTYPE note SYSTEM "note.dtd"><note><wrong>x</wrong></note>'
     nok = _write(d, "nok.xml", doc)
-    status, err = _check_one(nok, None)
+    status, err = _check(nok, None)
     assert status == "validation_error" and err
 
 
@@ -1013,3 +1023,78 @@ def test_star_untyped_measures_still_coerce_to_double(spark):
     assert dict(star.fact.dtypes)["m"] == "double"
     vals = {r.record_id: r.m for r in star.fact.collect()}
     assert vals == {"1": 2.5, "2": None}
+
+
+def test_one_scan_matches_per_file_checks_and_wholetext_keys(spark, tmp_path):
+    """``scan_xml_files`` validates the bytes in each scanned row and
+    extracts keys from the same row: every file's (status, error) equals
+    the driver-side ``_check_one`` of that file with its discovered
+    schema, and the key rows equal the whole-file text read's regex over
+    the same directory.  The corpus covers every validator branch, a
+    relative DTD system id, a comment key and ISO-8859-1 bytes."""
+    from xml_to_parquet_spark.sources.xml_source import (
+        COMMENT_PATTERNS,
+        list_xml_files,
+        scan_xml_files,
+    )
+    from xml_to_parquet_spark.sql_text import string_literal
+
+    d = str(tmp_path)
+    _write(d, "xsd_ok.xsd", ITEMS_XSD)
+    _write(d, "xsd_bad.xsd", ITEMS_XSD)
+    _write(d, "note.dtd", "<!ELEMENT note (to)><!ELEMENT to (#PCDATA)>")
+    _write(d, "xsd_ok.xml", "<!-- OrderType:B2B -->" + ITEMS_OK)
+    _write(d, "xsd_bad.xml", ITEMS_OK.replace("<count>3", "<count>3.5"))
+    _write(d, "malformed.xml", BAD)
+    _write(d, "dtd_internal.xml", DTD_DOC_INVALID)
+    _write(
+        d,
+        "dtd_relative.xml",
+        '<!DOCTYPE note SYSTEM "note.dtd"><!-- Region:EMEA -->'
+        "<note><to>x</to></note>",
+    )
+    _write(d, "plain.xml", "<!-- not a key --><r><a>1</a></r>")
+    with open(os.path.join(d, "latin1.xml"), "wb") as fh:
+        fh.write(
+            '<?xml version="1.0" encoding="ISO-8859-1"?>\n'
+            "<!-- City:Zürich --><r><a>Café</a></r>".encode("latin-1")
+        )
+    files = list_xml_files(d)
+
+    validation, keys = scan_xml_files(
+        spark, d, files, pathGlobFilter="*.xml"
+    )
+    got = {
+        r.source_file_path: (r.status, r.error) for r in validation.collect()
+    }
+    want = {
+        f: _check_one(f, _read(f), discover_schema_file(f)) for f in files
+    }
+    assert got == want
+    assert {os.path.basename(f): s for f, (s, _) in got.items()} == {
+        "dtd_internal.xml": "validation_error",
+        "dtd_relative.xml": "success",
+        "latin1.xml": "success",
+        "malformed.xml": "error",
+        "plain.xml": "success",
+        "xsd_bad.xml": "validation_error",
+        "xsd_ok.xml": "success",
+    }
+
+    comment = string_literal(r"<!--([\s\S]*?)-->")
+    first = f"trim(regexp_extract(value, {comment}, 1))"
+    anchored = string_literal(COMMENT_PATTERNS["standard"])
+    wholetext = (
+        spark.read.option("pathGlobFilter", "*.xml")
+        .text(d, wholetext=True)
+        .selectExpr(
+            "input_file_name() AS source_file_path",
+            f"regexp_extract({first}, {anchored}, 1) AS business_key_name",
+            f"regexp_extract({first}, {anchored}, 2) AS business_key_value",
+        )
+        .filter("business_key_name != ''")
+    )
+    assert sorted(keys.collect()) == sorted(wholetext.collect())
+    assert {r.business_key_name for r in keys.collect()} == {
+        "OrderType", "Region", "City",
+    }

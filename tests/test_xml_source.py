@@ -287,6 +287,19 @@ def test_directory_scan_and_lineage(spark, xml_dir):
     assert got["1001"].price is None and got["1"].status is None
 
 
+def test_directory_probe_follows_path_glob_filter(spark, tmp_path):
+    """The row-tag probe of a directory read reads the first file the
+    read's ``pathGlobFilter`` keeps, not a sibling that sorts first."""
+    d = tmp_path / "mixed"
+    d.mkdir()
+    (d / "a_schema.xsd").write_text('<xs:schema xmlns:xs="x"/>')
+    _write(d, "b.xml", PRODUCTS_XML)
+    df = read_xml_records(
+        spark, str(d), lineage=False, pathGlobFilter="*.xml"
+    )
+    assert sorted(r.id for r in df.collect()) == ["1", "2", "3"]
+
+
 def test_malformed_xml_permissive(spark, tmp_path):
     path = _write(tmp_path, "bad.xml", "<root><record id='1'><a>1</a></record>")
     # PERMISSIVE mode (default) routes unparseable rows to _corrupt_record

@@ -17,16 +17,17 @@ flatten → classify → star build → parquet sinks + manifests):
   ENABLE_VALIDATION=TRUE comparison row).
 
 Usage: python tools/bench_xml_etl.py [--files=100] [--keep]
-Prints one JSON line with measured MB/s, the Spark jobs and the py4j
-commands one pass runs (constant from pass to pass: the regression
-signals that wall-time drift cannot blur) and the reference-derived
-floors.
+Prints one JSON line with measured MB/s, the Spark jobs, the py4j
+commands and the Spark scans of the input one pass runs (constant from
+pass to pass: the regression signals that wall-time drift cannot blur)
+and the reference-derived floors.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import sys
 import time
@@ -102,6 +103,41 @@ def last_job_id(spark) -> int:
     return max(ids, default=-1)
 
 
+def last_execution_id(spark) -> int:
+    """Highest SQL execution id the driver has started, -1 before the
+    first."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList()
+    it = it.iterator()
+    last = -1
+    while it.hasNext():
+        last = max(last, it.next().executionId())
+    return last
+
+
+def input_scans(spark, input_dir: str, floor: int) -> int:
+    """Distinct Spark file scans of ``input_dir`` in the SQL executions
+    after ``floor``, read from the SQL status store: each scan node's
+    details block (``(n) Scan <format>`` in the formatted plan) that lists
+    the directory, keyed by its text without the node number.  A cached
+    relation's scan prints the same block, output attribute ids included,
+    in every execution that reads the cache, so it counts once.  A file
+    read inside a Python UDF is no Spark scan and is not counted."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList()
+    it = it.iterator()
+    scans = set()
+    while it.hasNext():
+        e = it.next()
+        if e.executionId() <= floor:
+            continue
+        for block in e.physicalPlanDescription().split("\n\n"):
+            block = block.strip()
+            if re.match(r"\(\d+\) Scan ", block) and input_dir in block:
+                scans.add(re.sub(r"^\(\d+\) ", "", block))
+    return len(scans)
+
+
 class Py4jCounter:
     """Counts the py4j commands the driver sends from now on, other than
     the gateway's memory (GC) commands: the planning work a pass does on
@@ -129,16 +165,18 @@ class Py4jCounter:
 def timed_passes(
     spark, inp: str, out_name: str, validate: bool, n: int, py4j: Py4jCounter
 ):
-    """Fastest of ``n`` passes, and the jobs and py4j commands of the last
-    one."""
+    """Fastest of ``n`` passes, and the jobs, py4j commands and input scans
+    of the last one."""
     best = float("inf")
     for _ in range(n):
         j0 = last_job_id(spark)
+        e0 = last_execution_id(spark)
         c0 = py4j.count
         best = min(best, run_once(spark, inp, out_name, validate=validate))
         calls = py4j.count - c0
         jobs = last_job_id(spark) - j0
-    return best, jobs, calls
+        scans = input_scans(spark, inp, e0)
+    return best, jobs, calls, scans
 
 
 def main() -> None:
@@ -180,11 +218,13 @@ def main() -> None:
     # multi-second freezes; min measures the engine's steady-state cost)
     trials = int(os.environ.get("XML_ETL_TRIALS", "3"))
     py4j = Py4jCounter()
-    plain, jobs, calls = timed_passes(
+    plain, jobs, calls, scans = timed_passes(
         spark, inp, "out_plain", False, trials, py4j
     )
-    validated, jobs_validated, calls_validated = timed_passes(
-        spark, inp, "out_validated", True, max(1, trials - 1), py4j
+    validated, jobs_validated, calls_validated, scans_validated = (
+        timed_passes(
+            spark, inp, "out_validated", True, max(1, trials - 1), py4j
+        )
     )
 
     # reference README.md:408-410 rows, keyed by file count
@@ -199,9 +239,12 @@ def main() -> None:
         "files_per_s": round(n_files / plain, 2),
         "jobs_per_pass": jobs,
         "py4j_calls_per_pass": calls,
+        "input_scans_per_pass": scans,
         "sec_validated": round(validated, 2),
+        "mb_per_s_validated": round(mb / validated, 2),
         "jobs_per_pass_validated": jobs_validated,
         "py4j_calls_per_pass_validated": calls_validated,
+        "input_scans_per_pass_validated": scans_validated,
         "validation_overhead_pct": round(100 * (validated / plain - 1), 1),
         "reference_sec": ref_sec,
         "reference_validated_sec": ref_val_sec,

@@ -28,6 +28,42 @@ TABLES = (
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
+# the confs that change the schema Spark infers from a Parquet footer
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+# inferred schema per (file version, inference confs): a pure memo, since
+# the key determines the value
+_INFERRED_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def read_parquet_file(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reusing the schema Spark inferred for
+    an unchanged single file.  Inference runs a Spark job (about 50 ms in a
+    warm session); a read with the schema given runs none.  A file is
+    unchanged while its real path, inode, size and mtime are; a different
+    value of any Parquet inference conf infers again.  Directories keep
+    plain inference."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (
+        os.path.realpath(path),
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+        tuple(spark.conf.get(c) for c in _PARQUET_INFERENCE_CONFS),
+    )
+    schema = _INFERRED_SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _INFERRED_SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
@@ -35,7 +71,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # without this legacy conf; runtime-settable, so self-defend here —
         # the session may be driver-provided without our session defaults
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet_file(spark, os.path.join(sf_dir, f"{name}.parquet"))
     # events.ts is parquet TIMESTAMP(NANOS): with nanosAsLong it arrives as a
     # raw long of ns-since-epoch — convert to a microsecond timestamp. Must
     # be integer division (`div`): epoch-ns (~1.7e18) exceeds 2^53, so a

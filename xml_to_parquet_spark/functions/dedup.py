@@ -115,7 +115,9 @@ def materialize_parquet(df: DataFrame, prefix: str = "mat_") -> DataFrame:
     """
     tmp = process_scratch_dir(prefix)
     df.write.mode("overwrite").parquet(tmp)
-    return df.sparkSession.read.parquet(tmp)
+    # the written schema, so the read runs no inference job; a file
+    # source reads every field as nullable, as inference would
+    return df.sparkSession.read.schema(df.schema).parquet(tmp)
 
 
 def exact_dedup(

@@ -871,27 +871,20 @@ def publish_star_schema(
     sees fact v2 joined to dims v1."""
     from concurrent.futures import ThreadPoolExecutor
 
-    roots: dict[str, str] = {}
-    versions: dict[str, str] = {}
-    fact_root = os.path.join(output_dir, fact_name)
-    versions[fact_name] = publish_parquet(
-        star.fact, fact_root, single_file=single_file
-    )
-    roots[fact_name] = fact_root
+    # every table is an independent job over the same input: publish the
+    # fact and every dimension concurrently (as ``write_star_schema``
+    # writes them), so the small dimension writes overlap the fact's
+    tables = {fact_name: (star.fact, single_file)}
+    for name, dim in star.dimensions.items():
+        tables[f"dim_{name}"] = (dim, True)
+    roots = {key: os.path.join(output_dir, key) for key in tables}
 
     def _pub(item):
-        name, dim = item
-        r = os.path.join(output_dir, f"dim_{name}")
-        v = publish_parquet(dim, r, single_file=True)
-        return f"dim_{name}", r, v
+        key, (df, single) = item
+        return publish_parquet(df, roots[key], single_file=single)
 
-    if star.dimensions:
-        with ThreadPoolExecutor(
-            max_workers=min(8, len(star.dimensions))
-        ) as ex:
-            for key, r, v in ex.map(_pub, star.dimensions.items()):
-                roots[key] = r
-                versions[key] = v
+    with ThreadPoolExecutor(max_workers=min(8, len(tables))) as ex:
+        versions = dict(zip(tables, ex.map(_pub, tables.items())))
     _atomic_write(
         os.path.join(output_dir, "_RUN_MANIFEST"),
         json.dumps({"tables": versions}, indent=1).encode(),

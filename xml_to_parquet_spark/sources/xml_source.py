@@ -22,13 +22,14 @@ Reference behavior being re-expressed (/root/reference/R/xml_parser.R):
 - S6 comment business keys (xml_parser.R:227-261, main.R:229-237): first
   XML comment matching ``^([A-Za-z]+):([^:]+)$`` becomes constant columns
   for every row of that file. Comments don't survive the rowTag parse, so
-  this is a separate whole-file text pass + broadcast join on file path —
-  no UDF.
+  the key comes from ``scan_xml_files``, one whole-file ``binaryFile``
+  pass that also feeds validation, + broadcast join on file path.
 
 Scale notes: one Spark job reads every file in the directory glob
 (parallelism = files × codec splits); the flatten pass is pure column
-expressions (whole-stage codegen, no Python); the business-key pass reads
-each file once more but produces one row per file, collected once.
+expressions (whole-stage codegen, no Python); the validation and
+business-key scan reads each file once more but produces one row per file,
+collected once.
 The flatten, lineage and key-attach projections are SQL text, one
 ``selectExpr`` each (nested field access, one lambda variable per array
 depth, ``try_element_at`` per occurrence): a ``Column`` method costs
@@ -86,14 +87,14 @@ def _spark_lists(name: str) -> bool:
     return not hidden or name.startswith(("_metadata", "_common_metadata"))
 
 
-def list_xml_files(input_dir: str) -> list[str]:
+def list_xml_files(input_dir: str, glob: str = XML_FILE_GLOB) -> list[str]:
     """The files a directory read of ``input_dir`` with
-    ``pathGlobFilter=XML_FILE_GLOB`` parses, sorted: regular files directly
-    under it whose names match the glob and pass Spark's listing rule."""
+    ``pathGlobFilter=glob`` parses, sorted: regular files directly under
+    it whose names match the glob and pass Spark's listing rule."""
     return [
         os.path.join(input_dir, n)
         for n in sorted(os.listdir(input_dir))
-        if fnmatchcase(n, XML_FILE_GLOB)
+        if fnmatchcase(n, glob)
         and _spark_lists(n)
         and os.path.isfile(os.path.join(input_dir, n))
     ]
@@ -718,9 +719,15 @@ def read_xml_records(
     the sample is not parsed.  At the 10,000-file design point it turns a
     full-corpus discovery scan into a bounded sample read.
     """
-    # the probe reads one file: the first sample file when given, since a
-    # directory ``path`` may list a non-XML sibling first
-    probe = schema_sample_paths[0] if schema_sample_paths else path
+    # the probe reads one file: the first sample file when given, else
+    # the first file of a local directory that the read itself lists (a
+    # non-XML sibling may sort first)
+    probe = path
+    if schema_sample_paths:
+        probe = schema_sample_paths[0]
+    elif os.path.isdir(path):
+        listed = list_xml_files(path, options.get("pathGlobFilter", "*"))
+        probe = listed[0] if listed else path
     tag = row_tag or resolve_row_tag(spark, probe)
     doc_order = (
         derive_document_order(spark, probe, tag)
@@ -751,42 +758,143 @@ BUSINESS_KEY_SCHEMA = T.StructType(
     ]
 )
 
+# a Hadoop path's local-file scheme; stripping it leaves the plain path
+FILE_SCHEME = r"^file:/+"
+
+_SCAN_SCHEMA = T.StructType(
+    [
+        T.StructField(c, T.StringType())
+        for c in (
+            "file_path",
+            "status",
+            "error",
+            "source_file_path",
+            "business_key_name",
+            "business_key_value",
+        )
+    ]
+)
+
+
+def scan_xml_files(
+    spark: SparkSession,
+    path: str | list[str],
+    files: list[str] | None = None,
+    schema_file: str | None = None,
+    schema_dir: str | None = None,
+    pattern: str = COMMENT_PATTERNS["standard"],
+    **options: str,
+) -> tuple[DataFrame | None, DataFrame]:
+    """One ``binaryFile`` read of ``path`` → (validation, business keys),
+    each a driver-held frame (``session.local_frame``).
+
+    ``options`` go to the reader (e.g. ``pathGlobFilter``), so the scan
+    lists the same files as the XML read.  Every file is one row: its
+    first-comment business key is SQL text over the content, and when
+    ``files`` is given a ``mapInPandas`` validates the bytes in the row
+    (``xml_validation._check_one``; the schema is ``schema_file`` or the
+    one discovered next to the file).  No file is opened twice and no row
+    is shuffled: the tasks follow Spark's file splits.  The ≤ #files rows
+    are collected once, so no later consumer re-reads or re-validates.
+
+    - validation: (source_file_path, status, error), one row per scanned
+      file, None when ``files`` is None.  Paths are plain, spelled as in
+      ``files`` (the caller's names for the scanned files).
+    - keys: (source_file_path, business_key_name, business_key_value) for
+      files whose first comment matches ``pattern``, keyed by
+      ``input_file_name()`` like the records' lineage.
+    """
+    from xml_to_parquet_spark.session import local_frame
+
+    comment = string_literal(r"<!--([\s\S]*?)-->")
+    first_comment = (
+        f"trim(regexp_extract(CAST(content AS STRING), {comment}, 1))"
+    )
+    # translate the anchored comment pattern into capture extractions
+    anchored = string_literal(f"^{pattern.strip('^$')}$")
+    key_columns = [
+        "input_file_name() AS source_file_path",
+        f"regexp_extract({first_comment}, {anchored}, 1)"
+        " AS business_key_name",
+        f"regexp_extract({first_comment}, {anchored}, 2)"
+        " AS business_key_value",
+    ]
+    scan = spark.read.format("binaryFile").options(**options).load(path)
+    if files is None:
+        rows = (
+            scan.selectExpr(*key_columns)
+            .filter("business_key_name != ''")
+            .collect()
+        )
+        return None, local_frame(spark, rows, BUSINESS_KEY_SCHEMA)
+
+    # the mapInPandas closure below is pickled by reference to the
+    # validation module — ship the package so workers can import it
+    # regardless of the driver's working directory (driver-provided
+    # sessions haven't)
+    from xml_to_parquet_spark.session import _ship_package
+    from xml_to_parquet_spark.validation.xml_validation import (
+        VALIDATION_SCHEMA,
+        _check_one,
+        discover_schema_file,
+    )
+
+    _ship_package(spark)
+
+    def _validate(batches):
+        for pdf in batches:
+            plain = [re.sub(FILE_SCHEME, "/", p) for p in pdf.pop("path")]
+            checks = [
+                _check_one(
+                    p,
+                    data,
+                    schema_file or discover_schema_file(p, schema_dir),
+                )
+                for p, data in zip(plain, pdf.pop("content"))
+            ]
+            yield pdf.assign(
+                file_path=plain,
+                status=[s for s, _ in checks],
+                error=[e for _, e in checks],
+            )
+
+    rows = (
+        scan.selectExpr("path", "content", *key_columns)
+        .mapInPandas(_validate, _SCAN_SCHEMA)
+        .collect()
+    )
+    named = {os.path.abspath(f): f for f in files}
+    validation = sorted(
+        (named.get(r.file_path, r.file_path), r.status, r.error)
+        for r in rows
+    )
+    keys = [
+        (r.source_file_path, r.business_key_name, r.business_key_value)
+        for r in rows
+        if r.business_key_name
+    ]
+    return (
+        local_frame(spark, validation, VALIDATION_SCHEMA),
+        local_frame(spark, keys, BUSINESS_KEY_SCHEMA),
+    )
+
 
 def extract_business_keys(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     pattern: str = COMMENT_PATTERNS["standard"],
     **options: str,
 ) -> DataFrame:
     """Per-file business key from the FIRST XML comment (reference S6).
 
     Returns (source_file_path, business_key_name, business_key_value) for
-    files whose first comment matches ``pattern``. One whole-file text
-    read (``options`` go to the reader, e.g. ``pathGlobFilter``), no UDF.
-    The ≤ #files rows are collected once and returned as a driver-held
-    frame (``session.local_frame``), so emptiness checks, key-name
-    discovery and the attach join never re-read the files.
+    files whose first comment matches ``pattern``: the key half of
+    ``scan_xml_files`` (one whole-file read, no UDF; ``options`` go to the
+    reader, e.g. ``pathGlobFilter``), as a driver-held frame, so
+    emptiness checks, key-name discovery and the attach join never re-read
+    the files.
     """
-    from xml_to_parquet_spark.session import local_frame
-
-    comment = string_literal(r"<!--([\s\S]*?)-->")
-    first_comment = f"trim(regexp_extract(value, {comment}, 1))"
-    # translate the anchored comment pattern into capture extractions
-    anchored = string_literal(f"^{pattern.strip('^$')}$")
-    rows = (
-        spark.read.options(**options)
-        .text(path, wholetext=True)
-        .selectExpr(
-            "input_file_name() AS source_file_path",
-            f"regexp_extract({first_comment}, {anchored}, 1)"
-            " AS business_key_name",
-            f"regexp_extract({first_comment}, {anchored}, 2)"
-            " AS business_key_value",
-        )
-        .filter("business_key_name != ''")
-        .collect()
-    )
-    return local_frame(spark, rows, BUSINESS_KEY_SCHEMA)
+    return scan_xml_files(spark, path, pattern=pattern, **options)[1]
 
 
 def attach_business_keys(

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xml_to_parquet_spark.catalog import read_parquet_file
 from xml_to_parquet_spark.session import (
     process_scratch_dir,
     quiet_jvm_logs,
@@ -248,7 +249,9 @@ def _first_data_batch_listener(committed):
 def _events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     # TIMESTAMP(NANOS) needs the legacy conf (see catalog.load_table)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    return read_parquet_file(
+        spark, os.path.join(sf_dir, "events.parquet")
+    ).schema
 
 
 def _normalize_event_ts(ev: DataFrame) -> DataFrame:
@@ -442,7 +445,9 @@ def stream_events_enriched(
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    dim = spark.read.parquet(os.path.join(sf_dir, f"{dim_table}.parquet")).select(
+    dim = read_parquet_file(
+        spark, os.path.join(sf_dir, f"{dim_table}.parquet")
+    ).select(
         F.col(dim_key).alias(stream_key), F.col(dim_attr).alias("segment")
     )
     enriched = ev.join(dim, on=stream_key, how="left").withColumn(
@@ -733,7 +738,7 @@ def stream_docs_drift(
     )
 
     static = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        read_parquet_file(spark, os.path.join(sf_dir, "documents.parquet"))
         .select("source", "text")
         .filter(F.col("source").isin(["src0", "src1"]))
     )

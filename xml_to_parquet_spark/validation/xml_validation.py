@@ -12,10 +12,13 @@ Reference behavior mirrored here:
   151-163) used as a gate: invalid files are excluded from the parse
   (main.R:153-166) — validation is a FILTER, not a typing source.
 
-Spark-first shape: validation runs as a distributed pandas UDF over the
-file list (each task validates its slice of files).  Its status rows, one
-per file, are collected once and returned as a driver-held frame; the gate
-is a filter on the passing paths, not a join.
+Spark-first shape: one scan feeds validation and keys.  A single
+``binaryFile`` read (``xml_source.scan_xml_files``) carries each file's
+bytes to a ``mapInPandas`` that validates them, next to the SQL that
+extracts the file's business key, so no file is read twice before the
+parse.  The status rows, one per file, are collected once and returned as
+a driver-held frame; the gate is a filter on the passing paths, not a
+join.
 
 Validator ladder per branch (most to least capable, import-gated):
 - XSD: lxml → xmlschema → stdlib subset validator (``xsd_subset.py``:
@@ -35,14 +38,17 @@ The UDF signature/batching is identical on every rung.
 
 from __future__ import annotations
 
+import io
 import os
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from xml_to_parquet_spark.sources.xml_source import (
+    FILE_SCHEME,
+    scan_xml_files,
+)
 from xml_to_parquet_spark.sql_text import string_literal
 
 try:  # import-gated: not in this container; real on a full cluster image
@@ -96,32 +102,30 @@ def discover_schema_file(
     )
 
 
-def has_internal_dtd(path: str) -> bool:
-    """DOCTYPE probe over the file head (schema_validator.R:142-148)."""
-    try:
-        with open(path, encoding="utf-8", errors="replace") as fh:
-            head = "".join(fh.readline() for _ in range(10))
-        return "<!DOCTYPE" in head
-    except OSError:
-        return False
+def has_internal_dtd(data: bytes) -> bool:
+    """DOCTYPE probe over the document's first ten lines
+    (schema_validator.R:142-148)."""
+    text = io.TextIOWrapper(
+        io.BytesIO(data), encoding="utf-8", errors="replace"
+    )
+    return "<!DOCTYPE" in "".join(text.readline() for _ in range(10))
 
 
-def _check_one(path: str, schema_file: str | None) -> tuple[str, str]:
-    """(status, error) for one file: validation_error | error | success.
+def _check_one(
+    path: str, data: bytes, schema_file: str | None
+) -> tuple[str, str]:
+    """(status, error) for the document ``data`` read from ``path``:
+    validation_error | error | success.  ``path`` locates the document,
+    so a relative DTD system id resolves next to it.
 
     Validation-method order mirrors validate_xml_auto
     (schema_validator.R:88-112): internal DTD → external XSD → external
     DTD → (no lxml or no schema) expat well-formedness.
     """
-    try:
-        with open(path, "rb") as fh:
-            data = fh.read()
-    except OSError as e:
-        return "error", str(e)
-
+    internal_dtd = has_internal_dtd(data)
     if HAS_LXML:
         try:
-            if has_internal_dtd(path):
+            if internal_dtd:
                 # reference validate_xml_dtd internal branch (DTDVALID)
                 parser = _lxml_etree.XMLParser(dtd_validation=True)
                 _lxml_etree.fromstring(data, parser)
@@ -147,11 +151,11 @@ def _check_one(path: str, schema_file: str | None) -> tuple[str, str]:
         except _lxml_etree.XMLSyntaxError as e:
             # parse failure — includes DTD-invalid under dtd_validation=True
             return (
-                "validation_error" if has_internal_dtd(path) else "error",
+                "validation_error" if internal_dtd else "error",
                 str(e),
             )
 
-    if has_internal_dtd(path) or (
+    if internal_dtd or (
         schema_file and schema_file.endswith(".dtd")
     ):
         # DTD without lxml: stdlib subset validator (dtd_subset.py), the
@@ -174,7 +178,7 @@ def _check_one(path: str, schema_file: str | None) -> tuple[str, str]:
             # parse failure — DTD-invalid docs under libxml2's DTDVALID
             # surface the same way (mirror of the lxml branch above)
             return (
-                "validation_error" if has_internal_dtd(path) else "error",
+                "validation_error" if internal_dtd else "error",
                 str(e),
             )
         except Exception as e:  # noqa: BLE001 — unreadable DTD
@@ -225,7 +229,8 @@ def _check_one(path: str, schema_file: str | None) -> tuple[str, str]:
 
 
 def well_formed_check(path: str) -> bool:
-    return _check_one(path, None)[0] == "success"
+    with open(path, "rb") as fh:
+        return _check_one(path, fh.read(), None)[0] == "success"
 
 
 VALIDATION_SCHEMA = T.StructType(
@@ -234,6 +239,10 @@ VALIDATION_SCHEMA = T.StructType(
         for c in ("source_file_path", "status", "error")
     ]
 )
+
+# Hadoop glob metacharacters: a listed path naming a file must match it
+# literally
+_GLOB_CHARS = re.compile(r"([\\*?\[\]{}])")
 
 
 def validate_files(
@@ -244,54 +253,16 @@ def validate_files(
 ) -> DataFrame:
     """Distributed per-file validation → (source_file_path, status, error).
 
-    Files are validated executor-side via mapInPandas (Arrow-batched; each
-    task opens only its slice), in one job when called.  The rows, one per
-    file and so bounded by the ``files`` list the caller already holds,
-    come back as a driver-held frame (``session.local_frame``): the gate,
-    the manifest counts and the error summary read them without
-    re-validating.  ``gate_valid`` drops records of invalid files
-    (reference P4 semantics).
+    The validation half of ``xml_source.scan_xml_files`` over the
+    ``files`` list: one job, each task validating the bytes of its file
+    split executor-side.  The rows, one per file, come back as a
+    driver-held frame (``session.local_frame``): the gate, the manifest
+    counts and the error summary read them without re-validating.
+    ``gate_valid`` drops records of invalid files (reference P4
+    semantics).
     """
-    # the mapInPandas closure below is pickled by reference to this
-    # module — ship the package so workers can import it regardless of
-    # the driver's working directory (driver-provided sessions haven't)
-    from xml_to_parquet_spark.session import _ship_package, local_frame
-
-    _ship_package(spark)
-
-    plan = [
-        (f, schema_file or discover_schema_file(f, schema_dir)) for f in files
-    ]
-    pdf_schema = "source_file_path string, schema_file string"
-    # partition count: enough slices to use every core with headroom for
-    # size skew, but not one near-empty task per file — each mapInPandas
-    # task pays a Python-worker/Arrow round trip, and under the stock
-    # pyspark daemon also a re-read of pyspark.zip's central directory by
-    # every zip importer (the task set-up calls importlib.invalidate_caches;
-    # about 0.12 s CPU per task on CPython 3.11 and a 4-core x86-64 VM,
-    # which get_spark's worker_daemon removes), so 64 tasks for 100 small
-    # files spent more on task overhead than on parsing (measured 1.9 s
-    # → 0.85 s at 100 files / 8 cores with 2×cores tasks)
-    n_parts = max(1, min(len(plan), 2 * spark.sparkContext.defaultParallelism))
-    src = spark.createDataFrame(
-        [(f, s or "") for f, s in plan], pdf_schema
-    ).repartition(n_parts)
-
-    def _validate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for f, s in zip(pdf["source_file_path"], pdf["schema_file"]):
-                status, err = _check_one(f, s or None)
-                out.append((f, status, err))
-            yield pd.DataFrame(
-                out, columns=["source_file_path", "status", "error"]
-            )
-
-    rows = src.mapInPandas(_validate, VALIDATION_SCHEMA).collect()
-    return local_frame(spark, rows, VALIDATION_SCHEMA)
-
-
-_FILE_SCHEME = r"^file:/+"
+    literal = [_GLOB_CHARS.sub(r"\\\1", f) for f in files]
+    return scan_xml_files(spark, literal, files, schema_file, schema_dir)[0]
 
 
 def gate_valid(records: DataFrame, validation: DataFrame) -> DataFrame:
@@ -304,13 +275,13 @@ def gate_valid(records: DataFrame, validation: DataFrame) -> DataFrame:
     stripped before the comparison, since validation paths are plain.
     """
     ok = [
-        re.sub(_FILE_SCHEME, "/", r.source_file_path)
+        re.sub(FILE_SCHEME, "/", r.source_file_path)
         for r in validation.select("source_file_path", "status").collect()
         if r.status == "success"
     ]
     if not ok:
         return records.filter("false")
-    scheme = string_literal(_FILE_SCHEME)
+    scheme = string_literal(FILE_SCHEME)
     paths = ", ".join(map(string_literal, ok))
     return records.filter(
         f"regexp_replace(source_file_path, {scheme}, '/') IN ({paths})"
